@@ -202,7 +202,7 @@ def parse_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no _N cap), so the benched parse cost moves with the sf dir —
     parse_full_entry keeps its fixed 1500-record subset for oracle-cost
     sanity; THIS id is the sf-proportional parse-throughput headline
-    (file-level ingest throughput lives in tools/bench_ingest.py)."""
+    (file-level ingest throughput: perfbench/run.py --workload ingest_bulk)."""
     return _full_entry(spark, sf_dir, None)
 
 

@@ -84,8 +84,10 @@ def write_techlog_jdbc(rows: DataFrame, cfg: ClickHouseConfig, table: str) -> No
 # offline against a stdlib http.server mock (tests/test_clickhouse_http.py).
 #
 # Scale shape: serialization is ONE codegen'd projection (escape +
-# concat_ws, no Python per-row work); each executor partition POSTs its
-# own batch, so insert parallelism = partition count, and a partition
+# concat_ws); the POST loop then iterates the serialized lines in
+# Python, one buffer per routed table, so every table of a micro-batch
+# is inserted by a single Spark job.  Each executor partition POSTs its
+# own batches, so insert parallelism = partition count, and a partition
 # failure retries with its Spark task.  TSV escaping follows the
 # TabSeparated spec: \ -> \\, tab -> \t, newline -> \n, CR -> \r,
 # NULL -> \N; Date as yyyy-MM-dd; DateTime64(6) with 6 fraction digits.
@@ -123,47 +125,56 @@ def _tsv_cell(name: str, dtype: T.DataType) -> Column:
     return F.coalesce(s, F.lit("\\N"))
 
 
-def techlog_tsv_lines(rows: DataFrame) -> DataFrame:
-    """One `line` string column per TechLogRow, in INSERT column order —
-    a single whole-stage-codegen projection."""
+def _tsv_line(rows: DataFrame) -> Column:
     dtypes = {f.name: f.dataType for f in rows.schema.fields}
     missing = [c for c in TECHLOG_INSERT_COLUMNS if c not in dtypes]
     if missing:
         raise ValueError(f"TechLogRow columns missing for INSERT: {missing}")
     cells = [_tsv_cell(c, dtypes[c]) for c in TECHLOG_INSERT_COLUMNS]
-    return rows.select(F.concat_ws("\t", *cells).alias("line"))
+    return F.concat_ws("\t", *cells)
+
+
+def techlog_tsv_lines(rows: DataFrame) -> DataFrame:
+    """One `line` string column per TechLogRow, in INSERT column order —
+    a single whole-stage-codegen projection."""
+    return rows.select(_tsv_line(rows).alias("line"))
 
 
 def write_techlog_http(
     rows: DataFrame,
     cfg: ClickHouseConfig,
-    table: str,
+    table: str | Column,
     insert_timeout_s: int = 60,
     max_post_bytes: int = 32 * 1024 * 1024,
 ) -> None:
-    """Append TechLogRow rows via the ClickHouse HTTP interface: each
-    partition streams its serialized TSV in POSTs of at most
-    ``max_post_bytes`` (reference semantics: 60 s insert timeout,
-    clickhouse.go:77; batch-per-send, :79-125).  The cap bounds
-    executor-Python memory to one batch regardless of partition size —
-    a 500 MB partition becomes ~16 sequential 32 MB INSERTs, each an
-    independent ClickHouse insert block.  ``urlopen`` raises
-    ``HTTPError`` on any non-2xx, so a failed INSERT fails the Spark
-    task and task retry re-sends (strictly stronger than the
-    reference's drop-on-error)."""
+    """Append TechLogRow rows via the ClickHouse HTTP interface, in ONE
+    Spark job.  ``table`` is a table name, or a Column naming each row's
+    table (``streaming.job.table_routing_column``): every table of the
+    frame is then inserted by the same job, the reference's per-group
+    INSERT loop (clickhouse.go:63-128) without a job per group.
+
+    Each partition serializes its rows once and keeps one buffer per
+    table; a buffer becomes one POST (reference semantics: 60 s insert
+    timeout, clickhouse.go:77; batch-per-send, :79-125).  When the sum
+    of a partition's buffers reaches ``max_post_bytes`` its largest
+    buffer is sent early, so executor-Python memory stays bounded by one
+    cap regardless of partition size or table count — a 500 MB partition
+    becomes ~16 sequential 32 MB INSERTs, each an independent ClickHouse
+    insert block.  ``urlopen`` raises ``HTTPError`` on any non-2xx, so a
+    failed INSERT fails the Spark task and task retry re-sends (strictly
+    stronger than the reference's drop-on-error)."""
     import urllib.parse
 
     address = cfg.address
     user, password = cfg.username, cfg.password
     database = cfg.database
-    stmt = insert_statement(table)
+    table_col = F.lit(table) if isinstance(table, str) else table
 
     def post_partition(it) -> None:
         import urllib.request
 
-        q = urllib.parse.urlencode({"query": stmt, "database": database})
-
-        def send(chunks: list[bytes]) -> None:
+        def send(t: str, chunks: list[bytes]) -> None:
+            q = urllib.parse.urlencode({"query": insert_statement(t), "database": database})
             req = urllib.request.Request(
                 f"http://{address}/?{q}",
                 data=b"".join(chunks),
@@ -178,16 +189,21 @@ def write_techlog_http(
             with urllib.request.urlopen(req, timeout=insert_timeout_s):
                 pass
 
-        buf: list[bytes] = []
-        size = 0
-        for r in it:
-            b = (r["line"] + "\n").encode("utf-8")
-            buf.append(b)
-            size += len(b)
-            if size >= max_post_bytes:
-                send(buf)
-                buf, size = [], 0
-        if buf:
-            send(buf)
+        bufs: dict[str, list[bytes]] = {}
+        sizes: dict[str, int] = {}
+        total = 0
+        for t, line in it:
+            b = (line + "\n").encode("utf-8")
+            bufs.setdefault(t, []).append(b)
+            sizes[t] = sizes.get(t, 0) + len(b)
+            total += len(b)
+            if total >= max_post_bytes:
+                big = max(sizes, key=sizes.get)
+                send(big, bufs.pop(big))
+                total -= sizes.pop(big)
+        for t, chunks in bufs.items():
+            send(t, chunks)
 
-    techlog_tsv_lines(rows).foreachPartition(post_partition)
+    rows.select(table_col.alias("_table"), _tsv_line(rows).alias("line")).foreachPartition(
+        post_partition
+    )

@@ -20,7 +20,7 @@ import json
 import os
 from itertools import chain
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..techlog.parser import parse_records
@@ -303,16 +303,22 @@ def build_techlog_stream(
     - ``clickhouse_http``: a ``ClickHouseConfig`` — in addition to the
       parquet sink, each micro-batch bulk-INSERTs its rows over the
       ClickHouse HTTP interface (sources/clickhouse.py
-      write_techlog_http), one INSERT per routed table — the
-      reference's stream -> ClickHouse data path end-to-end (batch
-      sends, clickhouse.go:79-125).  A failed INSERT fails the batch,
+      write_techlog_http) in ONE POST job for all routed tables: each
+      partition sends one INSERT per table it holds — the reference's
+      stream -> ClickHouse data path end-to-end (batch sends,
+      clickhouse.go:79-125).  A failed INSERT fails the batch,
       which Spark replays (checkpoint + per-epoch idempotent parquet
       keeps the local sink consistent).
     - ``metrics``: a ``TechLogMetricsListener`` (streaming/metrics.py) —
-      the sink reports each epoch's dead-letter count to it so the
-      per-batch progress record carries rejects alongside rows/sec and
-      batch duration (the reference's structured-logging surface,
-      logger.go).  Register it with ``metrics.attach(spark)``.
+      the sink reports each epoch's dead-letter count to it, observed on
+      the dead-letter write (no extra job), so the per-batch progress
+      record carries rejects alongside rows/sec and batch duration (the
+      reference's structured-logging surface, logger.go).  Register it
+      with ``metrics.attach(spark)``.
+
+    A micro-batch runs at most three Spark jobs: the parquet write (which
+    parses and caches the batch), the ClickHouse POST job when
+    ``clickhouse_http`` is set, and the dead-letter write.
 
     Returns a DataStreamWriter; call ``.start()`` (or use
     ``run_stream``).
@@ -374,9 +380,9 @@ def build_techlog_stream(
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         _maybe_reload()
-        # the sink runs several actions over this micro-batch (main
-        # write, dead-letter write, reject count); cache it so the file
-        # scan + record parse runs ONCE per batch, not once per action
+        # the sink runs up to three jobs over this micro-batch (parquet
+        # write, ClickHouse POST, dead-letter write); cache it so the file
+        # scan + record parse runs ONCE per batch, not once per job
         batch_df.persist()
         try:
             rows, rejects = to_techlog_rows(batch_df)
@@ -386,25 +392,21 @@ def build_techlog_stream(
             if clickhouse_http is not None:
                 from ..sources.clickhouse import write_techlog_http
 
-                routed = rows.withColumn(
-                    "_table",
+                # one POST job for every routed table
+                write_techlog_http(
+                    rows,
+                    clickhouse_http,
                     table_routing_column(routing["tmap"], routing["default"]),
                 )
-                tables = [
-                    r["_table"]
-                    for r in routed.select("_table").distinct().collect()
-                ]  # bounded by the routing map, not by rows
-                for t in sorted(tables):
-                    write_techlog_http(
-                        routed.filter(F.col("_table") == t).drop("_table"),
-                        clickhouse_http,
-                        t,
-                    )
+            if metrics is not None:
+                # the reject count rides on the dead-letter write: no job
+                seen = Observation()
+                rejects = rejects.observe(seen, F.count(F.lit(1)).alias("rejects"))
             # dead-letter branch (improvement over the silent drop,
             # clickhouse.go:92-95): keep rejects auditable next to the sink
             write_rejects(rejects, sink_dir, epoch_id)
             if metrics is not None:
-                metrics.record_rejects(epoch_id, rejects.count())
+                metrics.record_rejects(epoch_id, seen.get["rejects"])
         finally:
             batch_df.unpersist()
 

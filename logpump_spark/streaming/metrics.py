@@ -9,10 +9,12 @@ the standard ``logging`` machinery (route to file/Sentry/anything via
 handlers), and retaining the records in memory for tests and scraping.
 
 Reject counts can't be observed from the engine's progress event (they
-are a sink-side decision), so the sink reports them to the listener via
-``record_rejects`` keyed by epoch id; the listener merges them into the
-progress record for that batch when the event fires (progress events
-fire after ``foreachBatch`` returns, so the count is always there).
+are a sink-side decision).  The sink counts them with an ``Observation``
+on its dead-letter write, so the count costs no Spark job of its own,
+and reports it to the listener via ``record_rejects`` keyed by epoch id;
+the listener merges it into the progress record for that batch when the
+event fires (progress events fire after ``foreachBatch`` returns, so the
+count is always there).
 """
 
 from __future__ import annotations

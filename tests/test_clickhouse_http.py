@@ -320,3 +320,110 @@ def test_tsv_roundtrip_fuzz_random_hazard_strings(spark):
         assert sorted(decoded, key=repr) == sorted(expected, key=repr)
 
     run()
+
+
+# ---------------------------------------------------------------------------
+# Routed INSERTs: every table of a frame goes out from one Spark job, each
+# partition keeping one buffer per table under a shared byte cap.
+
+_ROUTES = {"EXCP": "errors", "DBMSSQL": "sql_log"}  # CALL -> default
+
+
+def _posts_by_table() -> list[tuple[str, list[str]]]:
+    out = []
+    for r in _RECEIVED:
+        stmt = r["query"]["query"][0]
+        table = stmt.split("INSERT INTO ", 1)[1].split(" ", 1)[0]
+        assert stmt == insert_statement(table)
+        out.append((table, r["body"].decode("utf-8").rstrip("\n").split("\n")))
+    return out
+
+
+def test_mixed_table_partition_posts_per_table_under_cap(spark, mock_server):
+    from logpump_spark.streaming.job import table_routing_column
+
+    cfg = ClickHouseConfig(
+        address=mock_server, username="u", password="p",
+        database="logs", protocol="http",
+    )
+    template = _techlog_rows(spark).collect()[0]
+    rows = [
+        template[:2] + (etype, 1000 + i) + template[4:]
+        for i, etype in enumerate(["DBMSSQL", "EXCP", "CALL"] * 6)
+    ]
+    df = spark.createDataFrame(rows, _techlog_rows(spark).schema).coalesce(1)
+    assert df.rdd.getNumPartitions() == 1
+    line_bytes = max(len(r.line) + 1 for r in techlog_tsv_lines(df).collect())
+    write_techlog_http(
+        df, cfg, table_routing_column(_ROUTES, "tech_log"),
+        max_post_bytes=4 * line_bytes,
+    )
+
+    posts = _posts_by_table()
+    got: list[str] = []
+    for table, lines in posts:
+        # each POST names one table and carries only that table's rows
+        assert {_ROUTES.get(ln.split("\t")[2], "tech_log") for ln in lines} == {table}
+        got += lines
+    per_table = [t for t, _ in posts]
+    assert set(per_table) == {"errors", "sql_log", "tech_log"}
+    assert max(per_table.count(t) for t in set(per_table)) > 1
+    # every row exactly once
+    assert sorted(got) == sorted(r.line for r in techlog_tsv_lines(df).collect())
+
+
+def test_stream_batch_with_http_sink_runs_three_jobs(spark, mock_server, tmp_path):
+    """One micro-batch routed to three tables (the default among them),
+    with the ClickHouse sink and a metrics listener attached, runs
+    exactly three Spark jobs: parquet write, POST, dead-letter write."""
+    import os
+    import time
+    import uuid
+
+    from logpump_spark.streaming import build_techlog_stream
+    from logpump_spark.streaming.job import run_stream
+    from logpump_spark.streaming.metrics import TechLogMetricsListener
+
+    sc = spark.sparkContext
+
+    def last_job_id() -> int:
+        # job ids are sequential: two markers bracket the jobs between them
+        marker = f"marker-{uuid.uuid4().hex}"
+        sc.setJobGroup(marker, marker)
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return max(sc.statusTracker().getJobIdsForGroup(marker))
+
+    d = {k: str(tmp_path / k) for k in ("in", "out", "ckpt")}
+    os.makedirs(d["in"])
+    with open(f"{d['in']}/25052607.log", "w", encoding="utf-8") as f:
+        f.write(
+            "07:15.123456-2500,DBMSSQL,0,Usr=ivanov,Sql='SELECT 1'\n"
+            "08:02.000001-10,EXCP,3,Usr=petrov,Event=Boom\n"
+            "09:30.999999-42,CALL,1,Usr=sidorov\n"
+        )
+    cfg = ClickHouseConfig(
+        address=mock_server, username="u", password="p",
+        database="logs", protocol="http",
+    )
+    listener = TechLogMetricsListener().attach(spark)
+    try:
+        writer = build_techlog_stream(
+            spark, d["in"], d["out"], d["ckpt"], table_map=_ROUTES,
+            available_now=True, clickhouse_http=cfg, metrics=listener,
+        )
+        j0 = last_job_id()
+        run_stream(writer, timeout_seconds=120)
+        n_jobs = last_job_id() - j0 - 1
+        deadline = time.time() + 30
+        while time.time() < deadline and not listener.batches:
+            time.sleep(0.2)
+    finally:
+        listener.detach(spark)
+
+    batches = [b for b in listener.batches if b["input_rows"] > 0]
+    assert len(batches) == 1 and batches[0]["rejects"] == 0
+    assert {t for t, _ in _posts_by_table()} == {"errors", "sql_log", "tech_log"}
+    assert n_jobs == 3
