@@ -9,7 +9,9 @@ the in-flight micro-batch and commits the checkpoint).  ``--drain``
 processes everything currently on disk and exits (availableNow), the
 batch-mode counterpart.  Per-micro-batch metrics (rows/sec, batch
 duration, dead-letter rejects) stream to the ``logpump_spark.metrics``
-logger as JSON lines — the logger.go structured-logging analog.
+logger as JSON lines — the logger.go structured-logging analog.  The
+routing (TableMap, DefaultTable) reloads from ``--config`` when the file
+changes (config.py).
 
 The OS-service wrapper verbs (install/start/stop, kardianos/service in
 main.go:106-133) are out of scope: cluster managers own process
@@ -40,6 +42,14 @@ def main() -> int:
 
     logging.basicConfig(level=logging.INFO, format="%(message)s")
     cfg = load_config(args.config)
+    # the HTTP interface is the only ClickHouse writer (sources/clickhouse.py)
+    use_clickhouse = cfg.clickhouse.protocol == "http"
+    if not use_clickhouse:
+        logging.getLogger("logpump_spark").warning(
+            "ClickHouse Protocol %r has no writer (only 'http' does): "
+            "only the parquet sink runs",
+            cfg.clickhouse.protocol,
+        )
     spark = get_spark("logpump")
     metrics = TechLogMetricsListener().attach(spark)
     writer = build_techlog_stream(
@@ -52,15 +62,11 @@ def main() -> int:
         glob=cfg.file_pattern,
         trigger_seconds=cfg.batch_interval,
         available_now=args.drain,
+        config_path=args.config,
         metrics=metrics,
-        # protocol: http + an address turns on the live ClickHouse
-        # bulk-INSERT path (sources/clickhouse.py HTTP interface)
-        # alongside the parquet sink — the reference's data path
-        clickhouse_http=(
-            cfg.clickhouse
-            if cfg.clickhouse.protocol == "http" and cfg.clickhouse.address
-            else None
-        ),
+        # the live ClickHouse bulk-INSERT path alongside the parquet
+        # sink — the reference's data path
+        clickhouse_http=cfg.clickhouse if use_clickhouse else None,
     )
     query = writer.start()
 

@@ -11,12 +11,14 @@ Mapping to the Spark engine:
 - LogDirectoryMap values -> streaming source input dirs
 - FilePattern            -> pathGlobFilter
 - BatchInterval          -> trigger(processingTime)
-- BatchSize              -> maxFilesPerTrigger admission analog (micro-
-  batching replaces exact row-count flushes; SURVEY.md §7.2)
+- BatchSize              -> parsed and validated only: micro-batching
+  replaces exact row-count flushes (SURVEY.md §7.2)
 - RescanInterval         -> subsumed by per-micro-batch file discovery
 - ProcessedStorage/Redis -> subsumed by checkpointLocation (stronger:
   per-batch commit vs 30 s persistence; SURVEY.md §2.E)
-- ClickHouse             -> JDBC sink options (sinks.py)
+- ClickHouse             -> HTTP INSERT sink (sources/clickhouse.py)
+  when Protocol is "http"; any other Protocol runs only the parquet sink,
+  with a startup warning (__main__.py)
 
 Config hot-reload (scan.go:24-52): the streaming sink re-parses the
 config per micro-batch on mtime change and swaps routing live

@@ -1,106 +1,33 @@
-"""ClickHouse sink via JDBC (SURVEY.md §2.D R4).
+"""ClickHouse sink over the HTTP interface (SURVEY.md §2.D R4).
 
 The reference bulk-INSERTs columnar native-protocol blocks with LZ4
-(internal/clickhouseclient/clickhouse.go:34-60, :79-125).  Spark's
-idiomatic equivalent is the ClickHouse JDBC driver inside foreachBatch:
-each executor partition opens a connection and streams its rows, so the
-insert parallelism equals the partition count (the reference is a single
-connection).  Wire compression and the async-insert knobs ride on the
-JDBC URL.
+(internal/clickhouseclient/clickhouse.go:34-60, :79-125).  This writer
+uses ClickHouse's public HTTP interface instead, which needs no jar:
 
-This container ships no ClickHouse server or JDBC jar, so the writer
-checks driver availability up front and raises a clear error; the parquet
-sink (streaming/job.py) is the tested stand-in with the identical 16-column
-schema.  Tests cover option construction (testable without a server).
+    POST /?query=INSERT INTO t (cols...) FORMAT TabSeparated
+
+with TSV rows as the body.  The 16-column INSERT list the reference
+builds (clickhouse.go:80-83) is byte-tested offline against a stdlib
+http.server mock (tests/test_clickhouse_http.py).
+
+Scale shape: serialization is ONE codegen'd projection (escape +
+concat_ws); the POST loop then iterates the serialized lines in Python,
+one buffer per routed table, so every table of a micro-batch is inserted
+by a single Spark job.  Each executor partition POSTs its own batches, so
+insert parallelism = partition count, and a partition failure retries
+with its Spark task.  TSV escaping follows the TabSeparated spec:
+\\ -> \\\\, tab -> \\t, newline -> \\n, CR -> \\r, NULL -> \\N; Date as
+yyyy-MM-dd; DateTime64(6) with 6 fraction digits.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
-from ..config import ClickHouseConfig
-
-JDBC_DRIVER = "com.clickhouse.jdbc.ClickHouseDriver"
-
-
-def jdbc_url(cfg: ClickHouseConfig) -> str:
-    scheme = "clickhouse"
-    proto = "http" if cfg.protocol == "http" else "tcp"
-    # the official driver speaks HTTP on 8123; native TCP via the same URL
-    # shape — keep the reference's protocol toggle (clickhouse.go:35-38)
-    return f"jdbc:{scheme}://{cfg.address}/{cfg.database}?protocol={proto}&compress=lz4"
-
-
-def jdbc_options(cfg: ClickHouseConfig, table: str, insert_timeout_s: int = 60) -> dict[str, str]:
-    """Option map mirroring the reference's connection settings: 60 s
-    insert timeout (clickhouse.go:77), LZ4 (clickhouse.go:48), batched
-    inserts (PrepareBatch/Send -> JDBC batchsize)."""
-    return {
-        "url": jdbc_url(cfg),
-        "dbtable": table,
-        "user": cfg.username,
-        "password": cfg.password,
-        "driver": JDBC_DRIVER,
-        "batchsize": "100000",
-        "isolationLevel": "NONE",  # ClickHouse has no transactions
-        "queryTimeout": str(insert_timeout_s),
-        "numPartitions": "8",
-    }
-
-
-def _driver_available(spark) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(JDBC_DRIVER)
-        return True
-    except Exception:  # noqa: BLE001 — any JVM-side failure means absent
-        return False
-
-
-def write_techlog_jdbc(rows: DataFrame, cfg: ClickHouseConfig, table: str) -> None:
-    """Append TechLogRow rows into a ClickHouse table.  Use inside
-    foreachBatch for streaming (per-micro-batch inserts = the reference's
-    batch sends, minus the drop-on-error: Spark retries the micro-batch)."""
-    spark = rows.sparkSession
-    if not _driver_available(spark):
-        raise RuntimeError(
-            "ClickHouse JDBC driver not on the classpath; add "
-            "com.clickhouse:clickhouse-jdbc:0.6.x via spark.jars.packages, "
-            "or use the parquet sink (streaming/job.py route_and_write)"
-        )
-    writer = rows.write.format("jdbc").mode("append")
-    for k, v in jdbc_options(cfg, table).items():
-        writer = writer.option(k, v)
-    writer.save()
-
-
-# ---------------------------------------------------------------------------
-# JDBC-free HTTP INSERT path (round 6).
-#
-# ClickHouse's HTTP interface accepts
-#   POST /?query=INSERT INTO t (cols...) FORMAT TabSeparated
-# with TSV rows as the body — the documented public wire format.  This
-# path needs no jar, so the 16-column INSERT body the reference builds
-# (internal/clickhouseclient/clickhouse.go:80-83 analog) is byte-testable
-# offline against a stdlib http.server mock (tests/test_clickhouse_http.py).
-#
-# Scale shape: serialization is ONE codegen'd projection (escape +
-# concat_ws); the POST loop then iterates the serialized lines in
-# Python, one buffer per routed table, so every table of a micro-batch
-# is inserted by a single Spark job.  Each executor partition POSTs its
-# own batches, so insert parallelism = partition count, and a partition
-# failure retries with its Spark task.  TSV escaping follows the
-# TabSeparated spec: \ -> \\, tab -> \t, newline -> \n, CR -> \r,
-# NULL -> \N; Date as yyyy-MM-dd; DateTime64(6) with 6 fraction digits.
-
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TECHLOG_INSERT_COLUMNS = (
-    "EventDate EventTime EventType Duration User InfoBase SessionID ClientID "
-    "ConnectionID ExceptionType ErrorText SQLText Rows RowsAffected Context "
-    "ProcessName"
-).split()
+from ..config import ClickHouseConfig
+from ..techlog.transform import TECHLOG_COLUMNS as TECHLOG_INSERT_COLUMNS
 
 
 def insert_statement(table: str) -> str:

@@ -30,20 +30,27 @@ the intended deployment shape.
 from __future__ import annotations
 
 import fnmatch
+import io
 import os
-import re
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-RECORD_START = re.compile(rb"\d{2}:\d{2}\.\d{2,}.*-")  # scan.go:16-21
+from ..techlog.reader import assemble_records
 
 SCHEMA = "filename string, record string"
 
 
-def _decode(raw: bytes) -> str:
-    return raw.decode("utf-8", errors="replace")
+def _read(path: str, start: int, stop: int) -> bytes:
+    with open(path, "rb") as f:
+        f.seek(start)
+        return f.read(stop - start)
+
+
+def _all_records(chunk: bytes) -> list[str]:
+    """Every record of a RAW BYTE chunk, the open last one included."""
+    return [rec.text for rec in assemble_records(io.BytesIO(chunk))]
 
 
 def _complete_records(chunk: bytes) -> tuple[list[str], int]:
@@ -59,19 +66,10 @@ def _complete_records(chunk: bytes) -> tuple[list[str], int]:
     re-encodes as a 3-byte U+FFFD — and a committed offset must land on a
     real file position.)  Offsets always land on line starts, which are
     byte-exact regardless of encoding errors inside lines."""
-    records: list[str] = []
-    buf: list[bytes] = []
-    consumed = 0  # byte offset of the start of the current (open) record
-    pos = 0
-    for line in chunk.splitlines(keepends=True):
-        stripped = line.replace(b"\x00", b"").rstrip(b"\r\n")
-        if RECORD_START.search(stripped) and buf:
-            records.append(_decode(b"\n".join(buf)))
-            buf = []
-            consumed = pos
-        buf.append(stripped)
-        pos += len(line)
-    return records, consumed
+    records = list(assemble_records(io.BytesIO(chunk)))
+    if not records:
+        return [], 0
+    return [rec.text for rec in records[:-1]], records[-1].start
 
 
 class TechlogTailReader(SimpleDataSourceStreamReader):
@@ -104,27 +102,18 @@ class TechlogTailReader(SimpleDataSourceStreamReader):
             start = int(offsets.get(path, 0))
             if size <= start:
                 continue
-            with open(path, "rb") as f:
-                f.seek(start)
-                raw = f.read(size - start)
-            records, consumed = _complete_records(raw)
-            base = os.path.basename(path)
-            rows.extend((base, r) for r in records)
+            raw = _read(path, start, size)
             if self.emit_tail:
-                tail_rec = _decode(
-                    b"\n".join(
-                        line.replace(b"\x00", b"").rstrip(b"\r\n")
-                        for line in raw[consumed:].splitlines()
-                    )
-                )
-                if tail_rec:
-                    rows.append((base, tail_rec))
+                records = _all_records(raw)
                 new_offsets[path] = size
             else:
                 # commit only up to the last COMPLETE record; the open one
                 # is re-read next batch (idempotent partial-record seek).
                 # consumed is already a byte offset — no re-encoding.
+                records, consumed = _complete_records(raw)
                 new_offsets[path] = start + consumed
+            base = os.path.basename(path)
+            rows.extend((base, r) for r in records)
         return rows, {"offsets": new_offsets}
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
@@ -132,7 +121,9 @@ class TechlogTailReader(SimpleDataSourceStreamReader):
         return iter(rows), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        # replay after failure: re-read the byte ranges [start, end) per file
+        # replay after failure: re-read the byte ranges [start, end) per
+        # file; a committed range ends at a record boundary (or at the end
+        # of the file under emitTail), so its last record is complete
         rows: list[tuple] = []
         s_off = start.get("offsets", {})
         e_off = end.get("offsets", {})
@@ -141,21 +132,8 @@ class TechlogTailReader(SimpleDataSourceStreamReader):
             e = int(e)
             if e <= s or not os.path.exists(path):
                 continue
-            with open(path, "rb") as f:
-                f.seek(s)
-                raw = f.read(e - s)
-            records, consumed = _complete_records(raw)
-            if self.emit_tail or consumed < len(raw):
-                tail_rec = _decode(
-                    b"\n".join(
-                        line.replace(b"\x00", b"").rstrip(b"\r\n")
-                        for line in raw[consumed:].splitlines()
-                    )
-                )
-                if tail_rec:
-                    records.append(tail_rec)
             base = os.path.basename(path)
-            rows.extend((base, r) for r in records)
+            rows.extend((base, r) for r in _all_records(_read(path, s, e)))
         return iter(rows)
 
     def commit(self, end: dict) -> None:

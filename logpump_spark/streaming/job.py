@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..techlog.parser import parse_records
-from ..techlog.reader import records_from_text
+from ..techlog.reader import load_whole_files, records_from_text
 from ..techlog.transform import to_techlog_rows
 
 
@@ -49,24 +49,23 @@ def route_and_write(
     base_path: str,
     table_map: dict[str, str],
     default_table: str = "tech_log",
-    epoch_id: int | None = None,
+    *,
+    epoch_id: int,
 ) -> None:
-    """One partitioned write for all tables: base_path/_table=<t>/EventDate=<d>/.
+    """One partitioned write for all tables:
+    base_path/_table=<t>/EventDate=<d>/_epoch=<epoch_id>/.
 
-    With ``epoch_id`` (the foreachBatch micro-batch id) the write is
-    IDEMPOTENT under micro-batch replay: rows carry an ``_epoch=<id>``
-    partition level and the write is a dynamic partition overwrite, so a
-    replayed batch rewrites exactly its own (table, date, epoch)
-    partitions instead of appending duplicates.  (The reference instead
-    DROPS failed batches outright, batch.go:43-49 — data loss; plain
-    ``epoch_id=None`` append is kept for one-shot batch use where there is
-    no replay.)  ``partitionOverwriteMode`` is passed as a per-write
+    ``epoch_id`` is the foreachBatch micro-batch id.  The write is a
+    dynamic partition overwrite of the rows' own (table, date, epoch)
+    partitions, so it is IDEMPOTENT under micro-batch replay: a replayed
+    batch rewrites its partitions instead of appending duplicates.  (The
+    reference instead DROPS failed batches outright, batch.go:43-49 —
+    data loss.)  ``partitionOverwriteMode`` is passed as a per-write
     option so no session conf is mutated."""
-    routed = rows.withColumn("_table", table_routing_column(table_map, default_table))
-    part_cols = ["_table", "EventDate"]
-    if epoch_id is not None:
-        routed = routed.withColumn("_epoch", F.lit(int(epoch_id)))
-        part_cols.append("_epoch")
+    part_cols = ["_table", "EventDate", "_epoch"]
+    routed = rows.withColumn(
+        "_table", table_routing_column(table_map, default_table)
+    ).withColumn("_epoch", F.lit(int(epoch_id)))
     (
         # sortWithinPartitions = the MergeTree ORDER BY (EventDate,
         # EventTime) clustering (README.md:131): rows land time-ordered
@@ -74,7 +73,7 @@ def route_and_write(
         # via parquet min/max stats.  zstd mirrors the reference's wire
         # compression choice at the storage layer (clickhouse.go:48).
         routed.sortWithinPartitions(*part_cols, "EventTime")
-        .write.mode("append" if epoch_id is None else "overwrite")
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .option("compression", "zstd")
         .partitionBy(*part_cols)
@@ -102,12 +101,12 @@ def compact_partitions(
     partition_filter: str | None = None,
 ) -> int:
     """Small-files maintenance for the streaming sink: each micro-batch
-    appends its own files, so hot (_table, EventDate) partitions
-    accumulate many small parquet files — the classic streaming-sink tax.
-    Rewrites matching partitions into ``target_files_per_partition``
-    sorted files (dynamic partition overwrite keeps untouched partitions
-    intact).  Run out-of-band (e.g. on rotated dates); returns the number
-    of partitions rewritten.
+    writes its own ``_epoch`` directory, so hot (_table, EventDate)
+    partitions accumulate many small parquet files — the classic
+    streaming-sink tax.  Folds the epoch directories of matching
+    partitions into one compaction epoch of
+    ``target_files_per_partition`` sorted files.  Run out-of-band (e.g.
+    on rotated dates); returns the number of partitions rewritten.
 
     The ClickHouse counterpart is MergeTree's background merges — here
     it's an explicit, schedulable operator.
@@ -115,34 +114,12 @@ def compact_partitions(
     df = spark.read.parquet(base_path)
     if partition_filter:
         df = df.filter(partition_filter)
-    has_epoch = "_epoch" in df.columns
-    if not has_epoch:
-        # driver-side collect is CARDINALITY-BOUNDED: distinct (_table,
-        # EventDate) is |tables| x |dates| (a few x thousands at 100 TB),
-        # never proportional to row count
-        parts = [
-            (r._table, str(r.EventDate))
-            for r in df.select("_table", "EventDate").distinct().collect()
-        ]
-        if not parts:
-            return 0
-        (
-            df.repartition(target_files_per_partition * len(parts), "_table", "EventDate")
-            .sortWithinPartitions("EventTime")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", "zstd")
-            .partitionBy("_table", "EventDate")
-            .parquet(base_path)
-        )
-        return len(parts)
 
-    # Epoch-aware sink (idempotent streaming layout): fold the epoch
-    # directories of every not-yet-compacted (_table, EventDate) group
-    # into ONE fresh compaction epoch, then delete the consumed
-    # directories.  Crash-safety comes from a MANIFEST persisted before
-    # the rewrite: `_compaction_manifest.json` (underscore prefix, so
-    # Spark's file index ignores it) pins the target epoch id and the
+    # Fold the epoch directories of every not-yet-compacted (_table,
+    # EventDate) group into ONE fresh compaction epoch, then delete the
+    # consumed directories.  Crash-safety comes from a MANIFEST persisted
+    # before the rewrite: `_compaction_manifest.json` (underscore prefix,
+    # so Spark's file index ignores it) pins the target epoch id and the
     # exact consumed (_table, EventDate, _epoch) set.  A rerun after a
     # crash at any point first FINISHES the recorded compaction — rewrite
     # the target from the still-present consumed dirs only if it hasn't
@@ -151,10 +128,11 @@ def compact_partitions(
     # are not in its consumed set and are left untouched, which is what
     # prevents the rewrite-everything duplication a max-over-all-epochs
     # target id had.  An already-compacted sink (exactly one negative
-    # compaction epoch per group) is a true no-op.  The residual window is the non-atomic job commit of
-    # the target partition itself, the same window any Hive-style
-    # table-in-place compaction has (the transactional fix is a Delta/
-    # Iceberg-style commit log, out of scope for a parquet sink).
+    # compaction epoch per group) is a true no-op.  The residual window
+    # is the non-atomic job commit of the target partition itself, the
+    # same window any Hive-style table-in-place compaction has (the
+    # transactional fix is a Delta/Iceberg-style commit log, out of scope
+    # for a parquet sink).
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
 
@@ -326,18 +304,10 @@ def build_techlog_stream(
     dirs = [input_dir] if isinstance(input_dir, str) else list(input_dir)
 
     def _one(d: str):
-        reader = (
-            spark.readStream.format("text")
-            .option("wholetext", "true")
-            .option("pathGlobFilter", glob)
-            .option("recursiveFileLookup", "true")
-        )
+        reader = spark.readStream
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        return reader.load(d).select(
-            F.substring_index(F.input_file_name(), "/", -1).alias("filename"),
-            F.col("value").alias("content"),
-        )
+        return load_whole_files(reader, d, glob)
 
     files = _one(dirs[0])
     for d in dirs[1:]:

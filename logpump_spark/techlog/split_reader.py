@@ -17,10 +17,13 @@ LINE begins inside it.  A scanner therefore:
 
 Every record is produced exactly once, byte-identical to the wholetext
 path (tests prove equality under adversarial chunk sizes that cut
-mid-record and mid-line).  Record assembly itself runs in Python inside
-mapInPandas (Arrow batches) — the per-range workload is I/O + regex, and
-ranges are sized (default 64 MB) so a 100 GB file becomes ~1600 parallel
-tasks instead of one.
+mid-record and mid-line).  One known difference: Java's ``(?m)^`` in the
+wholetext split also starts a line after a lone CR, U+0085, U+2028 or
+U+2029, while this reader (like the reference) splits lines at LF only.
+Record assembly itself is ``reader.assemble_records`` (shared with the
+tail source), run inside mapInPandas (Arrow batches) — the per-range
+workload is I/O + regex, and ranges are sized (default 64 MB) so a
+100 GB file becomes ~1600 parallel tasks instead of one.
 
 Executors open files directly (local FS / NFS / fuse mounts); for object
 stores, mount or swap `open` for an fsspec filesystem — the range logic
@@ -31,14 +34,11 @@ from __future__ import annotations
 
 import fnmatch
 import os
-import re
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .reader import RECORD_START_LINE
-
-RECORD_START = re.compile(RECORD_START_LINE.replace("[^\n]", "[^\\n]"))
+from .reader import assemble_records
 
 _SCHEMA = "filename string, record string"
 
@@ -47,42 +47,21 @@ def _scan_range(path: str, start: int, end: int) -> Iterator[str]:
     """Yield the records owned by [start, end) per the ownership rule."""
     with open(path, "rb") as f:
         f.seek(start)
-        if start > 0:
-            f.readline()  # partial line belongs to the previous range
-        buf: list[str] = []
-        saw_start = start == 0  # range 0 owns the headless preamble
-        while True:
-            pos = f.tell()
-            raw = f.readline()
-            if not raw:
-                break
-            line = raw.decode("utf-8", errors="replace").replace("\x00", "").rstrip(
-                "\r\n"
-            )
-            is_start = RECORD_START.search(line) is not None
+        # the partial line belongs to the previous range
+        pos = start + len(f.readline()) if start > 0 else 0
+        for rec in assemble_records(f, pos):
             # strict '>': the next range seeks to `end` and discards its
-            # first (assumed partial) line, so a line starting EXACTLY at
-            # `end` must be owned here — same convention as Hadoop's
+            # first (assumed partial) line, so a record starting EXACTLY
+            # at `end` must be owned here — same convention as Hadoop's
             # line-record readers
-            if pos > end:
-                # past the boundary: finish the open record, then stop at
-                # the first record-start (it belongs to the next range)
-                if is_start:
-                    break
-                if buf:
-                    buf.append(line)
-                continue
-            if is_start:
-                if buf:
-                    yield "\n".join(buf)
-                    buf = []
-                saw_start = True
-                buf.append(line)
-            elif saw_start or start == 0:
-                buf.append(line)
-            # else: continuation lines of the previous range's record
-        if buf:
-            yield "\n".join(buf)
+            if rec.start > end:
+                break
+            # range 0 owns the headless preamble; any other range's
+            # headless lines continue the previous range's open record
+            if rec.headed or start == 0:
+                yield rec.text
+            if rec.stop > end:
+                break  # the next record belongs to the next range
 
 
 def read_techlog_split(
@@ -127,9 +106,8 @@ def read_techlog_split(
                 pdf["path"], pdf["filename"], pdf["start"], pdf["end"]
             ):
                 for rec in _scan_range(path_, int(s), int(e)):
-                    if rec:
-                        out_f.append(fname)
-                        out_r.append(rec)
+                    out_f.append(fname)
+                    out_r.append(rec)
             yield pd.DataFrame({"filename": out_f, "record": out_r})
 
     return rdf.mapInPandas(_gen, _SCHEMA)

@@ -64,6 +64,9 @@ ClickHouse:
         env=env,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
+    # Protocol "tcp" has no ClickHouse writer: said once, at startup
+    warned = [ln for ln in proc.stderr.splitlines() if "ClickHouse Protocol 'tcp'" in ln]
+    assert len(warned) == 1 and "only the parquet sink runs" in warned[0], warned
     # routed partitioned sink materialized
     assert (sink / "_table=sql_log" / "EventDate=2025-05-26").is_dir()
     assert (sink / "_table=errors" / "EventDate=2025-05-26").is_dir()

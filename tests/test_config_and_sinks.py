@@ -1,13 +1,14 @@
-"""Config loading (reference config.yaml compatibility) + sink option
-construction + §2.F partitioned-layout pruning."""
+"""Config loading (reference config.yaml compatibility), the service's
+config wiring, and §2.F partitioned-layout pruning."""
 
 from __future__ import annotations
+
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
 
-from logpump_spark.config import ClickHouseConfig, load_config, sanitize
-from logpump_spark.sources.clickhouse import jdbc_options, jdbc_url, write_techlog_jdbc
+from logpump_spark.config import load_config, sanitize
 
 CONFIG_YAML = """\
 LogDirectoryMap:
@@ -61,24 +62,30 @@ def test_sanitize_bom_and_tabs():
     assert sanitize(b"\xef\xbb\xbfkey:\tv") == "key:  v"
 
 
-def test_jdbc_option_shape():
-    cfg = ClickHouseConfig(
-        address="ch:9000", username="u", password="p", database="db", protocol="http"
-    )
-    url = jdbc_url(cfg)
-    assert url.startswith("jdbc:clickhouse://ch:9000/db")
-    assert "protocol=http" in url and "compress=lz4" in url
-    opts = jdbc_options(cfg, "tech_log")
-    assert opts["dbtable"] == "tech_log"
-    assert opts["isolationLevel"] == "NONE"
-    assert opts["queryTimeout"] == "60"  # clickhouse.go:77
+def test_service_passes_config_path_for_hot_reload(tmp_path, monkeypatch):
+    # `python -m logpump_spark --config X` must hand X to the stream so
+    # the sink can hot-reload routing from it
+    import logpump_spark.__main__ as service
 
+    p = tmp_path / "config.yaml"
+    p.write_text(CONFIG_YAML)
+    seen = {}
 
-def test_jdbc_write_raises_without_driver(spark):
-    df = spark.range(1)
-    cfg = ClickHouseConfig(address="x:9000", database="db")
-    with pytest.raises(RuntimeError, match="JDBC driver not on the classpath"):
-        write_techlog_jdbc(df, cfg, "t")
+    class Built(Exception):
+        pass
+
+    def fake_build(*args, **kwargs):
+        seen.update(kwargs)
+        raise Built
+
+    # the metrics listener attaches to spark.streams before the build
+    fake_spark = SimpleNamespace(streams=SimpleNamespace(addListener=lambda _l: None))
+    monkeypatch.setattr(service, "get_spark", lambda *a, **k: fake_spark)
+    monkeypatch.setattr(service, "build_techlog_stream", fake_build)
+    monkeypatch.setattr("sys.argv", ["logpump_spark", "--config", str(p), "--drain"])
+    with pytest.raises(Built):
+        service.main()
+    assert seen["config_path"] == str(p)
 
 
 def test_partitioned_layout_prunes(spark, tmp_path):

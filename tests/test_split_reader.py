@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from logpump_spark.sources.tail_source import _complete_records
 from logpump_spark.techlog import parse_records, read_techlog, records_from_text
 from logpump_spark.techlog.split_reader import _scan_range, read_techlog_split
 
@@ -64,3 +65,25 @@ def test_split_parse_composition(spark, logdir):
     excp = [r for r in rows if r.Component == "EXCP"][0]
     assert excp.Context == "line one\nline two\nline three"
     assert len(rows) == 5
+
+
+@pytest.mark.parametrize("chunk", [7, 33, 64, 1 << 20])
+def test_non_ascii_digits_do_not_start_records(spark, tmp_path, chunk):
+    # \d is ASCII-only in Java and Go: a continuation line written in
+    # Arabic-Indic digits stays inside its record on every assembly path
+    d = tmp_path / "digits"
+    d.mkdir()
+    records = [
+        "07:15.123456-2500,DBMSSQL,0,Usr=ivanov,Sql='SELECT 1\n١٢:٣٤.٥٦ - inner'",
+        "07:16.000001-10,CALL,1,Usr=x",
+    ]
+    data = ("\n".join(records) + "\n").encode("utf-8")
+    (d / "25052607.log").write_bytes(data)
+    want = [("25052607.log", r) for r in records]
+
+    assert _wholetext_records(spark, str(d)) == want
+    got = read_techlog_split(spark, str(d), chunk_bytes=chunk).collect()
+    assert sorted(map(tuple, got)) == want, f"chunk={chunk}"
+    # the tail source completes a record when the next one starts
+    done, consumed = _complete_records(data + b"59:59.999999-1,END,0\n")
+    assert done == records and consumed == len(data)
