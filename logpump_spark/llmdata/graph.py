@@ -75,22 +75,13 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 
 def _driver_components(cur: DataFrame) -> DataFrame | None:
-    """Union-find the edge set on the driver when it is small enough to
-    collect, or ``None`` to keep the distributed star loop.
-
-    Why (r15, the ``_collect_fit_frame`` precedent): each star round is
-    2 shuffles plus a probe action over an edge set that near-dup
-    detection has ALREADY reduced to pairs — at bench scale a few
-    thousand rows.  The loop's wall is round-count x fixed per-action
-    cost, not data.  One bounded collect plus union-to-min on the
-    driver produces the identical (node, component = min reachable id)
-    labels; graphs over the budget (or conf
-    ``logpump.cc.driverUnionFind=false``) take the distributed loop
-    unchanged, so the 100 TB path is untouched."""
+    """Union-find the edge set on the driver, or ``None`` when it holds
+    more than ``CC_DRIVER_MAX_EDGES`` edges and the distributed star
+    loop runs.  Both give the same (node, component = min reachable id)
+    labels; the driver path replaces round-count x per-action cost with
+    one bounded collect."""
     spark = cur.sparkSession
-    if spark.conf.get("logpump.cc.driverUnionFind", "true").lower() != "true":
-        return None
-    # cur is the entry localCheckpoint — the count runs over
+    # cur is the entry materialization — the count runs over
     # materialized blocks, and doubles as the materialization the first
     # star round would have paid.
     n = cur.count()

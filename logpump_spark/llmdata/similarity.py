@@ -211,29 +211,15 @@ DRIVER_FIT_MAX_CELLS = 1 << 25
 def _collect_fit_frame(
     fit_emb: DataFrame, id_col: str, vec_col: str
 ) -> tuple[np.ndarray, np.ndarray] | None:
-    """Collect a provably-bounded fit frame to the driver, or ``None``
-    to keep the distributed path.
+    """Collect a bounded fit frame to the driver as (ids, quantized
+    vectors), or ``None`` to keep the distributed path.
 
-    Why (r15): the iterative fits (Lloyd, PQ sub-Lloyd, k-center greedy)
-    ran one Spark action PER ROUND over a frame that is bounded by
-    design — the modulo fit sample, or a corpus small enough to fit the
-    same budget — so the wall was round-count x (job scheduling +
-    Python-worker spin-up + a shuffle), not arithmetic.  Collecting the
-    frame once and iterating in numpy on the driver removes every
-    per-round action; the kernels (`_np_quantize`/`_np_cells`) are the
-    same exactness-pinned ones the distributed path runs, so centroids
-    are bit-identical (tests/test_driver_fit.py pins both paths equal).
-
-    Gate order: conf ``logpump.fit.driverLloyd`` (default on), integral
-    id type (mirrors the ``fit_stride`` contract), one ``count()``
-    (parquet-metadata-cheap on raw scans; on the checkpointed modulo
-    sample it performs the materialization the init job paid before), a
-    1-row dim probe, then the bounded collect.  Any row with a NULL id
-    or vector, or ragged dims, falls back to the distributed path so
-    behavior is unchanged."""
-    spark = fit_emb.sparkSession
-    if spark.conf.get("logpump.fit.driverLloyd", "true").lower() != "true":
-        return None
+    The driver path iterates in numpy with the same exactness-pinned
+    kernels (``_np_quantize``/``_np_cells``), so centroids are
+    bit-identical.  It falls back when ids are not integral, the frame
+    is empty or holds more than ``DRIVER_FIT_MAX_ROWS`` rows or
+    ``DRIVER_FIT_MAX_CELLS`` values, or a row has a NULL id or vector
+    or ragged dims."""
     try:
         id_type = fit_emb.schema[id_col].dataType.typeName()
     except Exception:
@@ -354,8 +340,7 @@ def fit_ivf(
     # collect replaces the init job plus one mapInPandas+shuffle+collect
     # action PER ITERATION, and centroids are bit-identical (same
     # kernels; pinned in tests/test_driver_fit.py).  Oversized frames,
-    # non-integral ids, NULLs, or ``logpump.fit.driverLloyd=false`` keep
-    # the distributed loop below unchanged.
+    # non-integral ids or NULLs keep the distributed loop below.
     frame = _collect_fit_frame(fit_emb, id_col, vec_col)
     if frame is not None:
         cent_rows = _driver_lloyd(frame[0], frame[1], n_cells, iters)

@@ -1,30 +1,16 @@
 """Round-robin fan-out for CPU-bound narrow operator chains.
 
-Why this exists (r15 measurement): a compact parquet input — one row
-group, or fewer files than cores — yields fewer scan tasks than the
-session has cores, and every NARROW operator chained onto that scan
-(per-gram md5, shingling, regex extraction, Arrow-batched Python) then
-runs on that handful of tasks while the rest of the machine idles.  At
-sf0.1 every test table is a single row group, so e.g. the whole
-`substring_fingerprint_pairs` gram/hash plane ran on 1 of 32 cores:
-4.7 s; with one round-robin exchange of the projected (id, text) rows
-it runs 32-wide in 1.0-1.6 s (identical output, probe in
-OPTIMIZATION_r15.md).  The same scan-parallelism starvation happens at
-cluster scale whenever an upstream stage emits few or skewed partitions.
+A compact parquet input (one row group, or fewer files than cores)
+yields fewer scan tasks than the session has cores, and every narrow
+operator chained onto that scan (per-gram md5, shingling, regex
+extraction, Arrow-batched Python) then runs on that handful of tasks
+while the rest of the machine idles.  One round-robin exchange of the
+projected rows spreads the chain over every core; a round-robin
+repartition reorders rows, nothing else, so results are identical.
 
-This is the same trade the parse plane's split projection ships
-(techlog/parser.py, SCALING.md §10.4): the exchange moves the projected
-rows once — measured there at ~2% of a regex-CPU-bound plane's wall per
-corpus GB, repaid even warm by the rebalance.  Flip
-``logpump.fanout.enabled=false`` when the input is already many-way
-parallel AND shuffle capacity — not CPU — is the job's binding
-resource; results are identical either way (a round-robin repartition
-reorders rows, nothing else).
-
-Only operators whose downstream per-row cost was MEASURED to dominate
-call this (see OPTIMIZATION_r15.md for the per-id probe table: the same
-spread applied to cheap-aggregation or already-shuffle-bound ids was a
-measured regression and is deliberately absent there).
+Only operators whose downstream per-row cost was measured to dominate
+call this (per-id probe table in OPTIMIZATION_r15.md: the same spread
+on cheap-aggregation or already-shuffle-bound ids was a regression).
 """
 
 from __future__ import annotations
@@ -33,18 +19,12 @@ from pyspark.sql import DataFrame
 
 
 def fan_out(df: DataFrame, *cols: str) -> DataFrame:
-    """Project ``df`` to ``cols`` (when given — shuffle only the bytes
-    the chain needs, guide-§2.3 style) and round-robin repartition to
-    the session's parallelism, so the CPU-bound narrow chain built on
-    the result runs at full width regardless of upstream layout.
-
-    Honors ``logpump.fanout.enabled`` (default true); disabled, only the
-    projection remains, so call sites keep one shape."""
+    """Project ``df`` to ``cols`` (when given, so only the bytes the
+    chain needs are shuffled) and round-robin repartition to the
+    session's parallelism."""
     spark = df.sparkSession
     if cols:
         df = df.select(*cols)
-    if spark.conf.get("logpump.fanout.enabled", "true").lower() != "true":
-        return df
     try:
         par = spark.sparkContext.defaultParallelism
     except Exception:  # Spark Connect exposes no sparkContext

@@ -1,92 +1,38 @@
-"""One conf-aware lineage-truncation point for every bounded
-intermediate the engine materializes (r16, VERDICT r15 "What's wrong
-#3" / "Next round #4").
+"""One lineage-truncation point for every bounded intermediate the
+engine materializes.
 
-r15 added ~10 materialize-once sites (PageRank's edge/degree tables,
-the CC edge set, the tokenize-once stream, the bigram count table, the
-interval boundary table, the MAD multiplicity tables, the triangle
-edge sets, the capped funnel prefix, the sampled fit frame) that
-called ``DataFrame.localCheckpoint`` directly.  ``localCheckpoint``
-stores blocks on executors and TRUNCATES lineage: on a multi-hour
-cluster job an executor loss after materialization fails the query
-instead of recomputing.  ``skewguard.ranged_blocks`` already had the
-deployment toggle (``logpump.segmented.reliableCheckpoint``) that
-upgrades the materialization to a reliable ``checkpoint()`` written to
-``sparkContext.setCheckpointDir`` — but the new sites bypassed it.
-
-``materialize()`` is now the single routing point: every internal
-materialization site calls it, and ONE session conf flips the whole
-engine between local (bench default — zero extra I/O) and reliable
-(long cluster jobs — blocks re-read from replicated storage on
-executor loss).  Confs honored, either being "true" engages reliable:
-
-- ``logpump.reliableCheckpoint`` — the global name (r16);
-- ``logpump.segmented.reliableCheckpoint`` — the r14 name, kept so
-  existing deployments' conf keeps working (it predates the non-
-  segmented sites).
-
-Exactness is unaffected: both forms materialize the same rows; the
-toggle only changes where the blocks live.  Pinned in
-tests/test_materialize.py (conf flipped -> RDD is reliably
-checkpointed; default -> locally checkpointed).
+One session conf, ``logpump.reliableCheckpoint``, decides where the
+blocks live.  Off (the default), ``localCheckpoint`` keeps them on the
+executors at no extra I/O; an executor lost after materialization fails
+the query instead of recomputing.  On, a reliable ``checkpoint()``
+writes them to ``sparkContext.setCheckpointDir`` (replicated storage on
+a cluster), so long jobs survive executor loss at the cost of one
+durable write.  Both forms materialize the same rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-_CONF_KEYS = (
-    "logpump.reliableCheckpoint",
-    "logpump.segmented.reliableCheckpoint",
-)
+_CONF_KEY = "logpump.reliableCheckpoint"
 
 
-def reliable_requested(df: DataFrame) -> bool:
-    """True when the session conf asks for reliable checkpoints."""
-    conf = df.sparkSession.conf
-    return any(conf.get(k, "false").lower() == "true" for k in _CONF_KEYS)
-
-
-def materialize(
-    df: DataFrame, eager: bool = False, reliable: bool | None = None
-) -> DataFrame:
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     """Materialize a bounded intermediate, truncating lineage.
 
-    ``reliable=None`` (the default) reads the session conf; an explicit
-    boolean wins over the conf (``ranged_blocks`` uses this to honor
-    its caller-level parameter precedence).  Reliable mode requires a
-    configured ``sparkContext.setCheckpointDir`` and raises up-front
-    rather than failing at first action.
-
-    The checkpoint subtree is PLANNED WITH AQE ON (the session
-    default).  Under AQE, ``Dataset.checkpoint(eager=False)`` calls
-    ``AdaptiveSparkPlanExec.execute()``, which materializes the
-    upstream shuffle stages AT THE CALL — i.e. at plan-construction
-    time.  r16 first tried planning these subtrees with AQE disabled
-    so the work would run lazily inside bench.py's timed write window,
-    then MEASURED the two modes end-to-end (construct+write,
-    interleaved, 4 reps each, sf0.1): non-AQE-planned checkpoints are
-    1.2-3.5x SLOWER (graph_pagerank 1.87 vs 4.06 s, graph_triangles
-    0.66 vs 2.28 s, timeseries_mad 1.11 vs 1.49 s,
-    interval_max_concurrent 0.83 vs 1.41 s, text_lm_score 1.17 vs
-    1.42 s) — AQE's runtime join conversions and partition coalescing
-    on the checkpointed subtree are real optimizations, not overhead.
-    So the FAST planning mode stays, and the measurement-honesty
-    problem is solved where it belongs: every query id that reaches a
-    ``materialize()`` site during construction is in bench.py's
-    ``eager_construction`` set, which starts the timer BEFORE
-    construction so the stage materialization is charged to the query.
+    Reliable mode needs ``sparkContext.setCheckpointDir`` and raises
+    here, not at the first action, when none is set.  The subtree is
+    planned with AQE on: ``checkpoint(eager=False)`` then runs the
+    upstream shuffle stages at the call, at plan construction.  Planning
+    without AQE measured 1.2-3.5x slower (OPTIMIZATION_r16.md).
     """
-    if reliable is None:
-        reliable = reliable_requested(df)
-    if reliable:
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise RuntimeError(
-                "materialize(reliable=True) needs "
-                "sparkContext.setCheckpointDir(<replicated path>) — "
-                "a reliable checkpoint has nowhere to write"
-            )
-    if reliable:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+    spark = df.sparkSession
+    if spark.conf.get(_CONF_KEY, "false").lower() != "true":
+        return df.localCheckpoint(eager=eager)
+    if spark.sparkContext.getCheckpointDir() is None:
+        raise RuntimeError(
+            f"{_CONF_KEY}=true needs "
+            "sparkContext.setCheckpointDir(<replicated path>) — "
+            "a reliable checkpoint has nowhere to write"
+        )
+    return df.checkpoint(eager=eager)

@@ -26,7 +26,7 @@ n_blocks x depth rows per key; the lookahead arrays by the same.
 
 Block ids come from the same materialized range repartition as
 sessionize (``skewguard.ranged_blocks``): the heads carry and the
-local-lead branch both read ONE localCheckpointed assignment, so block
+local-lead branch both read ONE materialized assignment, so block
 ids are reuse-independent by construction (r13 — retiring the r12
 sampler-determinism contract).  Routing is count-gated at plan-BUILD
 time like every skew guard (frozen-route contract, README Design
@@ -49,7 +49,6 @@ def lead_ints_segmented(
     ts_col: str = "ts",
     id_col: str = "event_id",
     out_prefix: str = "nxt",
-    materialize_blocks: bool = True,
 ) -> DataFrame:
     """Attach ``{out_prefix}{j}`` = lead(``value_col``, j) for j in
     1..depth over the GLOBAL per-key (ts, id) order, computed with the
@@ -62,20 +61,12 @@ def lead_ints_segmented(
     with a skew-proof min(struct(...)) aggregate instead of a per-key
     window; callers drop them when done.
 
-    ``materialize_blocks=True`` (default, r13): the heads carry and the
-    local-lead branch both consume the ranged frame, so it is
-    localCheckpointed and read once — one block assignment by
-    construction, one upstream scan + shuffle instead of two (cost and
-    the lineage-truncation trade on ``skewguard.ranged_blocks``).
-    ``False`` restores the lazy dual-exchange plan, exact only while
-    both exchanges sample identical bounds — opt-in for callers who
-    manage their own materialization of ``df``."""
+    The heads carry and the local-lead branch both read one
+    materialized block assignment (``skewguard.ranged_blocks``)."""
     if depth < 1:
         raise ValueError(f"depth must be >= 1, got {depth}")
     order = [F.col(ts_col).asc(), F.col(id_col).asc()]
-    ranged = ranged_blocks(
-        df, key_col, order, "_sl_blk", materialize=materialize_blocks
-    )
+    ranged = ranged_blocks(df, key_col, order, "_sl_blk")
 
     w_blk = W.partitionBy(key_col, "_sl_blk").orderBy(*order)
     w_full = w_blk.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)

@@ -223,11 +223,11 @@ def prefix_sum_segmented(
     reuse-independent by construction.  r13 note: the checkpoint is
     eager=False — AQE still runs the range shuffle when the call plans
     the frame, but the block persist itself is deferred to the first
-    action.  Fault-tolerance trade (lineage truncation) is stated on
-    ``ranged_blocks``; it matters most here, on the availability route
-    for >25M-row keys where long jobs make executor loss likeliest —
-    on lossy clusters, rerun recovers, or callers can reliable-
-    checkpoint the INPUT and call with the plain route instead.
+    action.  Fault-tolerance trade (lineage truncation) is stated in
+    ``operators/materialize.py``; it matters most here, on the
+    availability route for >25M-row keys where long jobs make executor
+    loss likeliest — on lossy clusters set
+    ``logpump.reliableCheckpoint=true``.
     Pinned ≡ plain by tests/test_running_distinct.py."""
     order = [F.col(ts_col).asc(), F.col(id_col).asc()]
     ranged = ranged_blocks(df, key_col, order, "_ps_blk")

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from .materialize import materialize as _mat, reliable_requested
+from .materialize import materialize as _mat
 
 # fan-out FLOOR of the capped-prefix pre-filter (stage 1): the hot
 # key's sort splits shard-count ways, and stage 2's exact rank sees at
@@ -71,8 +71,6 @@ def ranged_blocks(
     key_col: str,
     order: list,
     blk_col: str,
-    materialize: bool = True,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """ONE block assignment for the segmented window family (sessionize
     / segwin / seglead): range-repartition on the full per-key sort key
@@ -82,70 +80,17 @@ def ranged_blocks(
     an all-equal-(key, ts) burst still spreads by COUNT because the
     unique tiebreak id is part of the range key.
 
-    ``materialize=True`` (default, r13) localCheckpoints the frame so
-    every consumer reads ONE materialized assignment.  Every segmented
-    operator joins a per-(key, block) carry back onto the blocked rows,
-    i.e. TWO subtrees consume this frame; un-materialized, column
-    pruning keeps them from ReusedExchange and each branch would run its
-    own sampled range exchange — correctness would then rest on Spark's
-    range sampler being deterministic across independently-planned
-    exchanges, an engine implementation detail (the r12 contract this
-    default retires).  Measured at the k=64 hot twin the checkpoint is
-    wall-NEUTRAL-to-faster: the upstream scan + shuffle runs ONCE
-    instead of twice, which pays for writing the blocks (numbers in
-    SCALING.md §4.1).  r16: the checkpoint is planned with AQE
-    disabled (operators/materialize.py), so ``eager=False`` genuinely
-    defers execution — the range shuffle runs at the consumers' FIRST
-    ACTION, inside the bench's timed window, not at plan build (it
-    used to run at the checkpoint call because AdaptiveSparkPlanExec
-    materializes its stages eagerly).  Exactness is unchanged: both
-    consumers read ONE checkpointed RDD whose range bounds are sampled
-    once by its single shuffle dependency.
-
-    Fault-tolerance trade (stated, not hidden): localCheckpoint
-    truncates lineage — losing an executor AFTER its blocks
-    materialize fails the job instead of recomputing (rerun recovers).
-    On long multi-hour cluster jobs where executor loss is likely, pass
-    ``reliable=True`` (r14) — or flip the session conf
-    ``logpump.segmented.reliableCheckpoint=true``, which every
-    segmented operator's internal call picks up: the assignment goes
-    through a RELIABLE ``DataFrame.checkpoint()`` — written to the configured
-    ``sparkContext.setCheckpointDir`` (HDFS/object store on a cluster),
-    so a lost executor's blocks re-read from replicated storage instead
-    of failing the job.  Same single materialized assignment, same
-    exactness (pinned in tests/test_skewguard.py); costs one durable
-    write, which is why the benchmark default stays local.  Raises
-    up-front if no checkpoint dir is configured rather than failing at
-    first action.  ``materialize=False`` (no checkpoint at all) remains
-    the expert escape hatch; that form is exact only while both
-    exchanges sample identical bounds (the retired r12 contract), so it
-    is opt-in — and it takes PRECEDENCE over the session conf (r15): a
-    call site that explicitly opted out of materialization asked for
-    zero checkpoints, so the conf's reliable default only applies to
-    the materialized (default) form.  Explicit ``reliable=True`` still
-    wins over ``materialize=False`` (the more specific request)."""
+    The frame is materialized (``operators/materialize.py``) so every
+    consumer reads one assignment: each segmented operator joins a
+    per-(key, block) carry back onto the blocked rows, and two
+    independently planned range exchanges need not sample the same
+    bounds.  The range shuffle runs at this call, because the checkpoint
+    is planned with AQE on (SCALING.md §4.1 for the cost)."""
     n_blocks = BLOCK_OVERSUBSCRIPTION * cap_shards(df)
     ranged = df.repartitionByRange(
         n_blocks, F.col(key_col).asc(), *order
     ).withColumn(blk_col, F.spark_partition_id())
-    if reliable is None:
-        # deployment toggle: the segmented operators (sessionize /
-        # segwin / seglead) call this internally, so long cluster jobs
-        # flip ONE session conf instead of threading a parameter.
-        # materialize=False is an explicit no-checkpoint request and
-        # outranks the conf (ADVICE r14) — only the default
-        # materialized form picks up the reliable upgrade.  r16: the
-        # conf read (and the checkpoint itself) lives in
-        # operators/materialize.py, shared with every non-segmented
-        # materialization site; the global name
-        # ``logpump.reliableCheckpoint`` and the legacy segmented name
-        # both engage it.
-        reliable = materialize and reliable_requested(df)
-    if reliable:
-        return _mat(ranged, eager=False, reliable=True)
-    if materialize:
-        ranged = _mat(ranged, eager=False, reliable=False)
-    return ranged
+    return _mat(ranged, eager=False)
 
 
 def first_n_per_key(

@@ -758,8 +758,8 @@ def sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # when the corpus fits the driver-fit budget, collect the quantized
     # frame once and run the identical integer greedy in numpy — exact
     # int64 distances, same (d DESC, id ASC) tie-break, bit-identical
-    # picks (pinned in tests/test_driver_fit.py).  Oversized corpora /
-    # logpump.fit.driverLloyd=false keep the distributed loop.
+    # picks (pinned in tests/test_driver_fit.py).  Corpora over the
+    # budget, non-integral ids or NULLs keep the distributed loop.
     frame = _collect_fit_frame(
         emb.select("vec_id", "embedding"), "vec_id", "embedding"
     )

@@ -312,14 +312,7 @@ def build_techlog_stream(
     files = _one(dirs[0])
     for d in dirs[1:]:
         files = files.unionByName(_one(d))
-    # Fused projection shape, explicitly: the pump is a LONG-LIVED
-    # process, so the parse-plane C2 compile storm (BASELINE.md,
-    # round-14 resolution) is a one-time cost that amortizes away,
-    # while the split shape's round-robin exchange would recur on
-    # EVERY micro-batch — the exact deployment the documented trade
-    # says should run fused.  One-shot batch parses keep the split
-    # default.
-    entries = parse_records(records_from_text(files), split_stages=False)
+    entries = parse_records(records_from_text(files))
     routing = {"mtime": None, "tmap": table_map or {}, "default": default_table}
 
     def _maybe_reload() -> None:

@@ -260,30 +260,15 @@ def parse_records(
     Column types follow SURVEY.md §1.3 (unsigned Go ints -> long;
     InsertedAt = current_timestamp(), parser.go:42).
 
-    ``split_stages`` (r14, default ON; session conf
-    ``logpump.parse.splitProjection=false`` flips it): materialize the
-    shared intermediates — header map, positional parts, SQL tail,
-    Context tail — behind one round-robin exchange, so the projection
-    compiles as two roughly half-size codegen units instead of one.
-    This is the plan-shape fix for the documented parse-plane C2
-    compile storm (BASELINE.md): fresh-JVM-per-run A/B at sf0.1x10
-    (tools/ab_parse_split.py) measured the fused form entering the
-    storm in 4/10 JVMs (walls 21.4-39.3 s) vs 0/10 split (20.5-24.5 s,
-    median 23.6 vs 25.3 s) — the r8 JVM-knob sweep had already
-    exhausted every non-plan lever.  Cluster-scale trade, MEASURED
-    warm (r15, tools/ab_parse_warm, one warm JVM, decade corpus,
-    storms excluded by warmup): the exchange's warm tax is
-    zero-to-negative — split median 13.04 s vs fused 14.13 s — because
-    the plane is regex-CPU-bound at ~70 s wall/GB (local[32]) while
-    the corpus-sized exchange costs ~2% of that even on conservative
-    cluster shuffle throughput, and the rebalance it buys spreads the
-    regex work evenly regardless of upstream row-group layout.  Flip
-    the conf off only when executors are long-lived (per-JVM stall
-    amortized over >>3 GB parsed each) AND shuffle capacity — not
-    CPU — is the job's binding resource (SCALING.md §10.4 for the
-    numbers); the streaming pump ships fused for exactly that reason.
-    Correctness is identical either way (same expressions over the
-    same intermediates; parity + golden tests cover both shapes).
+    ``split_stages`` picks the projection shape; both give identical
+    rows.  Split puts the shared intermediates (header map, positional
+    parts, SQL tail, Context tail) behind one round-robin exchange, so
+    the projection compiles as two half-size codegen units and avoids
+    the parse-plane C2 compile storm (BASELINE.md).  Fused is one
+    projection with no exchange.  ``None`` picks split for a batch
+    ``df`` and fused for a streaming one: a long-lived pump pays the
+    storm once per process, but the exchange on every micro-batch
+    (SCALING.md §10.3-10.4).
     """
     rec = F.col(record_col)
     header_part, sql_text, context_text = split_record(rec)
@@ -291,12 +276,7 @@ def parse_records(
     m = header_map(header_part)
     keep = [c for c in df.columns if c not in (record_col, filename_col)]
     if split_stages is None:
-        split_stages = (
-            df.sparkSession.conf.get(
-                "logpump.parse.splitProjection", "true"
-            ).lower()
-            == "true"
-        )
+        split_stages = not df.isStreaming
     if not split_stages:
         def hv(go_key: str) -> Column:
             return F.coalesce(F.element_at(m, go_key), F.lit(""))

@@ -33,7 +33,10 @@ from pyspark.sql.streaming import DataStreamReader
 # internal/watcher/scan.go:16-21).
 RECORD_START_LINE = r"[^\n]*\d{2}:\d{2}\.\d{2,}[^\n]*-"
 # Split positions: line starts whose line matches RECORD_START_LINE.
-_SPLIT_REGEX = r"(?m)^(?=" + RECORD_START_LINE + r")"
+# UNIX_LINES (d) makes LF the only line terminator, as in the Python
+# assembler and the reference; plain (?m) would also start a line after
+# a lone CR, U+0085, U+2028 or U+2029.
+_SPLIT_REGEX = r"(?md)^(?=" + RECORD_START_LINE + r")"
 # The same test for the Python assemblers, on one byte line.  A bytes
 # pattern keeps \d to ASCII digits, as Java's and Go's \d are; a str
 # pattern would also start records at non-ASCII digits.

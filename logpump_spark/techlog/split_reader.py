@@ -17,13 +17,11 @@ LINE begins inside it.  A scanner therefore:
 
 Every record is produced exactly once, byte-identical to the wholetext
 path (tests prove equality under adversarial chunk sizes that cut
-mid-record and mid-line).  One known difference: Java's ``(?m)^`` in the
-wholetext split also starts a line after a lone CR, U+0085, U+2028 or
-U+2029, while this reader (like the reference) splits lines at LF only.
-Record assembly itself is ``reader.assemble_records`` (shared with the
-tail source), run inside mapInPandas (Arrow batches) — the per-range
-workload is I/O + regex, and ranges are sized (default 64 MB) so a
-100 GB file becomes ~1600 parallel tasks instead of one.
+mid-record and mid-line).  Record assembly itself is
+``reader.assemble_records`` (shared with the tail source), run inside
+mapInPandas (Arrow batches) — the per-range workload is I/O + regex,
+and ranges are sized (default 64 MB) so a 100 GB file becomes ~1600
+parallel tasks instead of one.
 
 Executors open files directly (local FS / NFS / fuse mounts); for object
 stores, mount or swap `open` for an fsspec filesystem — the range logic

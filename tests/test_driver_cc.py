@@ -1,7 +1,7 @@
 """Pins for the r15 driver-side union-find short-circuit in
 connected_components (graph._driver_components): the driver path must
-be IDENTICAL to the distributed star loop it replaces, engage only
-inside the stated budget, and honor the conf gate.
+be IDENTICAL to the distributed star loop it replaces and engage only
+inside the stated budget (``CC_DRIVER_MAX_EDGES`` = 0 forces the loop).
 """
 
 from __future__ import annotations
@@ -12,12 +12,14 @@ from logpump_spark.llmdata import graph
 from logpump_spark.llmdata.graph import connected_components
 
 
-def _labels(spark, edges, conf):
-    spark.conf.set("logpump.cc.driverUnionFind", conf)
-    try:
-        return sorted(map(tuple, connected_components(edges).collect()))
-    finally:
-        spark.conf.unset("logpump.cc.driverUnionFind")
+def _labels(edges):
+    return sorted(map(tuple, connected_components(edges).collect()))
+
+
+def _distributed_labels(edges, monkeypatch):
+    with monkeypatch.context() as m:
+        m.setattr(graph, "CC_DRIVER_MAX_EDGES", 0)
+        return _labels(edges)
 
 
 def _random_edges(spark, n_nodes=200, n_edges=350, seed=7):
@@ -32,9 +34,9 @@ def _random_edges(spark, n_nodes=200, n_edges=350, seed=7):
     return spark.createDataFrame(rows, "id_a long, id_b long")
 
 
-def test_driver_equals_distributed_random_graph(spark):
+def test_driver_equals_distributed_random_graph(spark, monkeypatch):
     e = _random_edges(spark)
-    assert _labels(spark, e, "true") == _labels(spark, e, "false")
+    assert _labels(e) == _distributed_labels(e, monkeypatch)
 
 
 def test_driver_min_label_hand_graph(spark):
@@ -42,7 +44,7 @@ def test_driver_min_label_hand_graph(spark):
     e = spark.createDataFrame(
         [(2, 1), (2, 3), (11, 10)], "id_a long, id_b long"
     )
-    assert _labels(spark, e, "true") == [
+    assert _labels(e) == [
         (1, 1),
         (2, 1),
         (3, 1),
@@ -53,15 +55,15 @@ def test_driver_min_label_hand_graph(spark):
 
 def test_driver_ignores_self_loops_and_empty(spark):
     loops = spark.createDataFrame([(5, 5)], "id_a long, id_b long")
-    assert _labels(spark, loops, "true") == []
+    assert _labels(loops) == []
     empty = spark.createDataFrame([], "id_a long, id_b long")
-    assert _labels(spark, empty, "true") == []
+    assert _labels(empty) == []
 
 
 def test_budget_falls_back_to_distributed(spark, monkeypatch):
     # over-budget edge sets must take the star loop — same labels
     e = _random_edges(spark, n_nodes=40, n_edges=60)
     monkeypatch.setattr(graph, "CC_DRIVER_MAX_EDGES", 10)
-    capped = _labels(spark, e, "true")
+    capped = _labels(e)
     monkeypatch.undo()
-    assert capped == _labels(spark, e, "true")
+    assert capped == _labels(e)

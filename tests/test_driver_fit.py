@@ -1,8 +1,8 @@
 """Pins for the r15 driver-side bounded-fit path
 (similarity._collect_fit_frame / _driver_lloyd, the fit_pq sub-Lloyd
 branch, and sample_kcenter's numpy greedy): the driver path must be
-BIT-IDENTICAL to the distributed loop it replaces, engage only inside
-the stated budget, and honor the conf gate.
+BIT-IDENTICAL to the distributed loop it replaces and engage only
+inside the stated budget (``DRIVER_FIT_MAX_ROWS`` = 0 forces the loop).
 """
 
 from __future__ import annotations
@@ -28,42 +28,48 @@ def emb(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def _ivf_result(spark, emb, conf, **kw):
-    spark.conf.set("logpump.fit.driverLloyd", conf)
-    try:
+def _run(monkeypatch, driver, fn):
+    # a row budget of 0 sends every fit frame to the distributed loop
+    with monkeypatch.context() as m:
+        if not driver:
+            m.setattr(sim, "DRIVER_FIT_MAX_ROWS", 0)
+        return fn()
+
+
+def _ivf_result(emb, monkeypatch, driver, **kw):
+    def fit():
         cells, cent = fit_ivf(emb, n_cells=4, iters=2, **kw)
         return (
             sorted(map(tuple, cells.collect())),
             sorted((r.cid, tuple(r.c)) for r in cent.collect()),
         )
-    finally:
-        spark.conf.unset("logpump.fit.driverLloyd")
+
+    return _run(monkeypatch, driver, fit)
 
 
-def test_fit_ivf_driver_equals_distributed(spark, emb):
-    assert _ivf_result(spark, emb, "true") == _ivf_result(spark, emb, "false")
+def test_fit_ivf_driver_equals_distributed(spark, emb, monkeypatch):
+    assert _ivf_result(emb, monkeypatch, True) == _ivf_result(
+        emb, monkeypatch, False
+    )
 
 
-def test_fit_ivf_driver_equals_distributed_strided(spark, emb):
-    a = _ivf_result(spark, emb, "true", fit_stride=3, fit_offset=0)
-    b = _ivf_result(spark, emb, "false", fit_stride=3, fit_offset=0)
+def test_fit_ivf_driver_equals_distributed_strided(spark, emb, monkeypatch):
+    a = _ivf_result(emb, monkeypatch, True, fit_stride=3, fit_offset=0)
+    b = _ivf_result(emb, monkeypatch, False, fit_stride=3, fit_offset=0)
     assert a == b
 
 
-def test_fit_pq_driver_equals_distributed(spark, emb):
-    out = {}
-    for conf in ("true", "false"):
-        spark.conf.set("logpump.fit.driverLloyd", conf)
-        try:
-            codes, cent = fit_pq(emb, n_sub=2, k=3, iters=2, dim=8)
-            out[conf] = (
-                sorted(map(tuple, codes.collect())),
-                sorted((r.m, r.cid, tuple(r.c)) for r in cent.collect()),
-            )
-        finally:
-            spark.conf.unset("logpump.fit.driverLloyd")
-    assert out["true"] == out["false"]
-    assert len(out["true"][1]) == 6  # 2 subspaces x 3 centroids
+def test_fit_pq_driver_equals_distributed(spark, emb, monkeypatch):
+    def fit():
+        codes, cent = fit_pq(emb, n_sub=2, k=3, iters=2, dim=8)
+        return (
+            sorted(map(tuple, codes.collect())),
+            sorted((r.m, r.cid, tuple(r.c)) for r in cent.collect()),
+        )
+
+    out = {d: _run(monkeypatch, d, fit) for d in (True, False)}
+    assert out[True] == out[False]
+    assert len(out[True][1]) == 6  # 2 subspaces x 3 centroids
 
 
 def test_driver_path_engages_and_conf_gates(spark, emb, monkeypatch):
@@ -75,12 +81,8 @@ def test_driver_path_engages_and_conf_gates(spark, emb, monkeypatch):
     fit_ivf(emb, n_cells=4, iters=1)
     assert calls, "bounded frame must take the driver path by default"
     calls.clear()
-    spark.conf.set("logpump.fit.driverLloyd", "false")
-    try:
-        fit_ivf(emb, n_cells=4, iters=1)
-    finally:
-        spark.conf.unset("logpump.fit.driverLloyd")
-    assert not calls, "conf off must keep the distributed loop"
+    _run(monkeypatch, False, lambda: fit_ivf(emb, n_cells=4, iters=1))
+    assert not calls, "a frame over the budget must keep the distributed loop"
 
 
 def test_budget_gates_fall_back(spark, emb, monkeypatch):
@@ -105,14 +107,14 @@ def test_null_rows_fall_back(spark):
     assert sim._collect_fit_frame(df, "vec_id", "embedding") is None
 
 
-def test_kcenter_query_identical_on_off(spark):
+def test_kcenter_query_identical_on_off(spark, monkeypatch):
     import __spark_entry__ as se
 
     q = se.queries()["sample_kcenter"]
-    on = sorted(map(tuple, q(spark, SF_SMALL).collect()))
-    spark.conf.set("logpump.fit.driverLloyd", "false")
-    try:
-        off = sorted(map(tuple, q(spark, SF_SMALL).collect()))
-    finally:
-        spark.conf.unset("logpump.fit.driverLloyd")
+
+    def run():
+        return sorted(map(tuple, q(spark, SF_SMALL).collect()))
+
+    on = _run(monkeypatch, True, run)
+    off = _run(monkeypatch, False, run)
     assert on == off and len(on) == 4

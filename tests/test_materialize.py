@@ -1,5 +1,4 @@
-"""operators/materialize.py — the single conf-aware lineage-truncation
-point (r16, VERDICT r15 item 4).
+"""operators/materialize.py — the single lineage-truncation point.
 
 Every internal materialize-once site (skewguard's ranged blocks and
 capped prefix, the CC/PageRank graph tables, tokenize-once, the bigram
@@ -8,8 +7,8 @@ the triangle edge sets, the sampled fit frame) now routes through
 ``materialize()``, so ONE session conf upgrades the whole engine from
 executor-local blocks (bench default) to reliable checkpoints for long
 cluster jobs.  Pins: the conf actually engages ``checkpoint()`` (files
-land in the checkpoint dir), results are unchanged either way, both
-conf spellings work, and a routed QUERY site picks the conf up.
+land in the checkpoint dir), results are unchanged either way, and a
+routed QUERY site picks the conf up.
 """
 
 from __future__ import annotations
@@ -41,9 +40,7 @@ def test_default_is_local_checkpoint(spark):
 
 
 @pytest.mark.parametrize(
-    "conf_key",
-    ["logpump.reliableCheckpoint", "logpump.segmented.reliableCheckpoint"],
-    ids=["global", "legacy_segmented"],
+    "conf_key", ["logpump.reliableCheckpoint"], ids=["global"]
 )
 def test_conf_engages_reliable_checkpoint(spark, tmp_path, conf_key):
     df = spark.range(10).withColumn("v", F.col("id") * 3)
@@ -65,10 +62,12 @@ def test_reliable_fails_fast_without_ckpt_dir(spark):
     prev_dir = spark.sparkContext.getCheckpointDir()
     if prev_dir is not None:
         _restore_checkpoint_dir(spark, None)
+    spark.conf.set("logpump.reliableCheckpoint", "true")
     try:
         with pytest.raises(RuntimeError, match="setCheckpointDir"):
-            materialize(df, reliable=True)
+            materialize(df)
     finally:
+        spark.conf.unset("logpump.reliableCheckpoint")
         _restore_checkpoint_dir(spark, prev_dir)
 
 

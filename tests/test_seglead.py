@@ -244,16 +244,6 @@ def test_sequence_next_node_null_when_anchor_is_last(spark):
     assert out[6] == "a"        # first anchor's successor, not the b tail
 
 
-def test_unmaterialized_variant_equals_plain(spark):
-    # opt-out path (materialize_blocks=False): lazy dual-exchange plan.
-    # Small corpus — bounds are exhaustive here, so equality is safe by
-    # construction; this pins only that the opt-out still computes.
-    d = _with_lbl(_mk(spark, _rand(14, hot_rows=300)))
-    got = lead_ints_segmented(d, "lbl", 2, materialize_blocks=False)
-    want = _plain_leads(d, 2)
-    assert _collect_leads(got, 2) == _collect_leads(want, 2)
-
-
 def test_sequence_next_node_anchor_may_reference_any_column(spark):
     # the anchor predicate is evaluated BEFORE the narrow-row
     # projection, so it may use columns the sort never carries

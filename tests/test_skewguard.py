@@ -204,7 +204,7 @@ def _route_seglead(df):
 )
 def test_ranged_blocks_reliable_checkpoint_exact(spark, tmp_path, route):
     # r14 (+r15 family sweep): the reliable-checkpoint opt-in for long
-    # cluster jobs (conf logpump.segmented.reliableCheckpoint) — same
+    # cluster jobs (conf logpump.reliableCheckpoint) — same
     # single materialized block assignment, exact vs the default
     # localCheckpoint path, and a durable write actually happens.  The
     # conf's documented reach is "every segmented operator's internal
@@ -213,7 +213,7 @@ def test_ranged_blocks_reliable_checkpoint_exact(spark, tmp_path, route):
     df = _mk(spark, _rand_rows(7))
     want = sorted(tuple(r) for r in route(df).collect())
     prev_dir = spark.sparkContext.getCheckpointDir()
-    spark.conf.set("logpump.segmented.reliableCheckpoint", "true")
+    spark.conf.set("logpump.reliableCheckpoint", "true")
     try:
         ckpt = tmp_path / "ckpt"
         spark.sparkContext.setCheckpointDir(str(ckpt))
@@ -221,7 +221,7 @@ def test_ranged_blocks_reliable_checkpoint_exact(spark, tmp_path, route):
         assert got == want
         assert any(ckpt.rglob("*")), "reliable run wrote no checkpoint files"
     finally:
-        spark.conf.unset("logpump.segmented.reliableCheckpoint")
+        spark.conf.unset("logpump.reliableCheckpoint")
         _restore_checkpoint_dir(spark, prev_dir)
 
 
@@ -234,6 +234,7 @@ def test_ranged_blocks_reliable_fails_fast_without_ckpt_dir(spark):
     prev_dir = spark.sparkContext.getCheckpointDir()
     if prev_dir is not None:
         _restore_checkpoint_dir(spark, None)
+    spark.conf.set("logpump.reliableCheckpoint", "true")
     try:
         with pytest.raises(RuntimeError, match="setCheckpointDir"):
             ranged_blocks(
@@ -241,45 +242,7 @@ def test_ranged_blocks_reliable_fails_fast_without_ckpt_dir(spark):
                 "user_id",
                 [F.col("ts").asc(), F.col("event_id").asc()],
                 "_blk",
-                reliable=True,
             )
     finally:
-        _restore_checkpoint_dir(spark, prev_dir)
-
-
-def test_materialize_false_outranks_reliable_conf(spark):
-    # r15 (ADVICE r14): an explicit materialize=False is the documented
-    # expert escape hatch — zero checkpoints — and must NOT be silently
-    # upgraded to the reliable path by the session conf.  Under the
-    # conf with NO checkpoint dir configured, the reliable path would
-    # raise; the escape hatch must build and run.
-    from logpump_spark.operators.skewguard import ranged_blocks
-
-    df = _mk(spark, _rand_rows(7))
-    prev_dir = spark.sparkContext.getCheckpointDir()
-    if prev_dir is not None:
-        _restore_checkpoint_dir(spark, None)
-    spark.conf.set("logpump.segmented.reliableCheckpoint", "true")
-    try:
-        out = ranged_blocks(
-            df,
-            "user_id",
-            [F.col("ts").asc(), F.col("event_id").asc()],
-            "_blk",
-            materialize=False,
-        )
-        assert out.count() == df.count()
-        # explicit reliable=True still wins over materialize=False (the
-        # more specific request) — so it must still fail fast here
-        with pytest.raises(RuntimeError, match="setCheckpointDir"):
-            ranged_blocks(
-                df,
-                "user_id",
-                [F.col("ts").asc(), F.col("event_id").asc()],
-                "_blk",
-                materialize=False,
-                reliable=True,
-            )
-    finally:
-        spark.conf.unset("logpump.segmented.reliableCheckpoint")
+        spark.conf.unset("logpump.reliableCheckpoint")
         _restore_checkpoint_dir(spark, prev_dir)

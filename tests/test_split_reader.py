@@ -67,16 +67,9 @@ def test_split_parse_composition(spark, logdir):
     assert len(rows) == 5
 
 
-@pytest.mark.parametrize("chunk", [7, 33, 64, 1 << 20])
-def test_non_ascii_digits_do_not_start_records(spark, tmp_path, chunk):
-    # \d is ASCII-only in Java and Go: a continuation line written in
-    # Arabic-Indic digits stays inside its record on every assembly path
-    d = tmp_path / "digits"
+def _assert_all_paths_agree(spark, d, records, chunk):
+    # wholetext, the split reader and the tail source all give `records`
     d.mkdir()
-    records = [
-        "07:15.123456-2500,DBMSSQL,0,Usr=ivanov,Sql='SELECT 1\n١٢:٣٤.٥٦ - inner'",
-        "07:16.000001-10,CALL,1,Usr=x",
-    ]
     data = ("\n".join(records) + "\n").encode("utf-8")
     (d / "25052607.log").write_bytes(data)
     want = [("25052607.log", r) for r in records]
@@ -87,3 +80,26 @@ def test_non_ascii_digits_do_not_start_records(spark, tmp_path, chunk):
     # the tail source completes a record when the next one starts
     done, consumed = _complete_records(data + b"59:59.999999-1,END,0\n")
     assert done == records and consumed == len(data)
+
+
+@pytest.mark.parametrize("chunk", [7, 33, 64, 1 << 20])
+def test_non_ascii_digits_do_not_start_records(spark, tmp_path, chunk):
+    # \d is ASCII-only in Java and Go: a continuation line written in
+    # Arabic-Indic digits stays inside its record on every assembly path
+    records = [
+        "07:15.123456-2500,DBMSSQL,0,Usr=ivanov,Sql='SELECT 1\n١٢:٣٤.٥٦ - inner'",
+        "07:16.000001-10,CALL,1,Usr=x",
+    ]
+    _assert_all_paths_agree(spark, tmp_path / "digits", records, chunk)
+
+
+@pytest.mark.parametrize("chunk", [7, 33, 1 << 20])
+def test_non_lf_line_separators_do_not_start_records(spark, tmp_path, chunk):
+    # lines end at LF only: a lone CR, NEL, LINE SEPARATOR or PARAGRAPH
+    # SEPARATOR before a timestamp stays inside its record on every
+    # assembly path
+    records = [
+        f"07:1{i}.123456-{i},A,x{sep}tail 07:16.000000-2,B"
+        for i, sep in enumerate(["\r", "\u0085", "\u2028", "\u2029"])
+    ]
+    _assert_all_paths_agree(spark, tmp_path / "seps", records, chunk)

@@ -5,8 +5,8 @@ subsystem, with data.
 The repo's documented story is "C2 compile lottery" by analogy with the
 parse plane, but nobody has MEASURED which JVM counter the swing tracks
 for the iterative shapes.  This probe runs each id in a FRESH JVM
-(subprocess — per-JVM state is the whole point, same protocol as
-tools/ab_parse_split.py), and records next to the wall:
+(subprocess — per-JVM state is the whole point), and records next to
+the wall:
 
 - ``jit_ms``: CompilationMXBean.getTotalCompilationTime() — cumulative
   background JIT compile time (C1+C2 threads),

@@ -30,9 +30,9 @@ def main() -> None:
     calls = {"n": 0}
     orig = M.materialize
 
-    def counting(df: DataFrame, eager: bool = False, reliable=None):
+    def counting(df: DataFrame, eager: bool = False):
         calls["n"] += 1
-        return orig(df, eager=eager, reliable=reliable)
+        return orig(df, eager=eager)
 
     M.materialize = counting
     # rebind every `from ... import materialize as _mat` alias
