@@ -1,15 +1,18 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
-"sf": ...}.
+"""Benchmark harness: times every registry id at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test tables) on local[$SPARK_GRAFT_CPUS] and prints
+two JSON lines: the full detail (also written to BENCH_DETAIL.json),
+then a compact final line {"metric": ..., "value": N, "unit": "sec",
+"top50": {...}, ...} short enough to survive a tail capture of stdout.
 
-Execution is measured with a noop-format write so we time the full
-distributed plan (scan -> shuffle -> agg) without driver-collect overhead
-distorting large result sets.
+Each id is timed by one rule (`time_query`): construct + execute, where
+execution is a noop-format write, so the full distributed plan (scan ->
+shuffle -> agg) runs without driver-collect overhead.  `value` is the
+construct + execute total; `value_construct` and `value_execute` split it.
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import re
@@ -228,6 +231,78 @@ HEADLINE += [
 ]
 
 
+# A caller that keeps only the tail of stdout clips a long line's HEAD,
+# which then fails to parse; the final line must stay shorter than this.
+FINAL_LINE_MAX = 2048
+
+
+def time_query(spark, fn, sf_dir: str) -> tuple[float, float]:
+    """Time one registry id -> (construct_s, execute_s).
+
+    The one timing rule, the same as perfbench/registry.py::run_pass:
+    start the timer, build the DataFrame, take a split time, run a
+    noop-format write, stop.  Construction is charged because it can run
+    Spark jobs of its own (table loads, count gates, fits, checkpoints).
+    """
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return t1 - t0, time.perf_counter() - t1
+
+
+def bench_detail(
+    construct: dict[str, float],
+    execute: dict[str, float],
+    canary_sec: float,
+    sf: float | None,
+) -> dict:
+    """The BENCH_DETAIL.json object: per-id construct + execute in
+    `queries` (what tools/bench_compare.py reads), each phase in its own
+    map, and their totals."""
+    totals = {n: construct[n] + execute[n] for n in construct}
+    # like-for-like subtotal over the first 164 ids, the headline set
+    # before HEADLINE grew to the full registry
+    head164 = set(HEADLINE[:_HEADLINE_164])
+    return {
+        "metric": "headline_queries_total_wall",
+        "value": round(sum(totals.values()), 4),
+        "value_construct": round(sum(construct.values()), 4),
+        "value_execute": round(sum(execute.values()), 4),
+        "value_headline164": round(
+            sum(t for n, t in totals.items() if n in head164), 4
+        ),
+        "canary_sec": canary_sec,
+        "unit": "sec",
+        "queries": {n: round(t, 4) for n, t in totals.items()},
+        "construct": {n: round(t, 4) for n, t in construct.items()},
+        "execute": {n: round(t, 4) for n, t in execute.items()},
+        "sf": sf,
+    }
+
+
+def final_line(detail: dict) -> str:
+    """The compact last stdout line: the totals plus construct + execute
+    of the 50 heaviest ids, under FINAL_LINE_MAX bytes."""
+    queries = detail["queries"]
+    top = sorted(queries, key=queries.get, reverse=True)[:50]
+    line = json.dumps(
+        {
+            **{
+                k: v
+                for k, v in detail.items()
+                if k not in ("queries", "construct", "execute")
+            },
+            "n_queries": len(queries),
+            "queries_detail": "BENCH_DETAIL.json",
+            "top50": {n: round(queries[n], 3) for n in top},
+        },
+        separators=(",", ":"),
+    )
+    assert len(line) < FINAL_LINE_MAX, f"final line is {len(line)} bytes"
+    return line
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from logpump_spark.session import get_spark
@@ -238,27 +313,14 @@ def main() -> None:
     queries = se.queries()
     names = [n for n in HEADLINE if n in queries]
 
-    # Optional subset for A/B drift experiments (tools/bench_ab.py):
-    # comma-separated names, or "@/path/to/file" with one name per line.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        if only.startswith("@"):
-            with open(only[1:]) as f:
-                want = {line.strip() for line in f if line.strip()}
-        else:
-            want = {s.strip() for s in only.split(",") if s.strip()}
-        names = [n for n in names if n in want]
-
     # JVM/codegen warmup on a trivial plan so q1 doesn't pay startup costs
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    # Calibration canary (r12, VERDICT r11 item 3): a FIXED pure-engine
-    # workload, independent of any repo code or input data, timed before
-    # the query loop.  Concurrent driver-machine load inflates every
-    # per-id wall uniformly (the r11 driver bench read 1.17x while a
-    # clean A/B of identical code read 0.96x); the canary separates the
-    # two signals mechanically — see BASELINE.md "Canary normalization"
-    # for the rule.  Median of 3 so a single scheduler hiccup can't
+    # Calibration canary: a FIXED pure-engine workload, independent of
+    # any repo code or input data, timed before the query loop.
+    # Concurrent machine load inflates every per-id wall uniformly; the
+    # canary separates that from a code change (BASELINE.md "Canary
+    # normalization").  Median of 3 so a single scheduler hiccup can't
     # poison the calibration itself.
     def _canary_once() -> float:
         t0 = time.perf_counter()
@@ -286,170 +348,29 @@ def main() -> None:
             except Exception:
                 pass  # warmup is best-effort; the timed run decides
 
-    # r1 methodology: the timer covers the noop write only (construction
-    # is lazy plan building).  Queries listed here run REAL work eagerly
-    # during construction (iterative fits / stats with driver-side
-    # actions), so for them the timer must start before construction —
-    # everything else keeps the r1-comparable write-only window.
-    eager_construction = {
-        # the dedup trio shares one memoized CC fit (r7): whichever
-        # member constructs first pays it, the others read the cache —
-        # all three stay timer-before-construction so the fit is charged
-        "dedup_components",
-        "dedup_canonical",
-        "dedup_cluster_stats",
-        "dedup_semantic",  # k-means fit collects at construction (r4 tail)
-        "sim_ivf_topk",  # k-means fit collects at construction (r4)
-        "sim_pq_adc",  # PQ codebook fit collects at construction (r4)
-        "embed_quantize_sq8",  # range stats collect at construction (r4)
-        "sample_kcenter",  # k greedy farthest-point rounds at construction (r5)
-        "sim_ivf_recall",  # k-means fit collects at construction (r6)
-        # r12 accounting fix: the count-gated skew/vocabulary routing
-        # runs its detector aggregate at plan CONSTRUCTION (frozen-route
-        # contract) — charge it like every other construction-time job
-        # above.  r13 MEASURED the charge per id on a quiet machine
-        # (best-of-2 after warmup, sf0.1): construction = 0.30-0.49 s
-        # for the pure gate ids (detector job ~0.22 s + table load
-        # ~0.12 s + plan/py4j overhead), 0.6-0.7 s where the gate
-        # composes (funnel_steps_capped's literal collect,
-        # interval_max_concurrent's session_stats gate), ~1.8 s for
-        # dedup_semantic (corpus count + the Lloyd fit collects, which
-        # were always charged here).  The r12 note's "+0.1-0.3 s"
-        # UNDERSTATED by ~2x, and the r12 clean A/B's 13.5 s / 10 ids
-        # reading was dominated by in-sweep heap/GC pressure, not
-        # per-id construction: the isolated sum over the ten gated ids
-        # is ~4.7 s.  sessionize_events isolated: 0.33 s construct +
-        # 0.33 s write = 0.65 s total.
-        "sessionize_events",       # sessionize hot-key gate (r11)
-        "win_moving_avg",          # segwin hot-key gate (r11)
-        "funnel_strict_order",     # seglead hot-key gate (r12)
-        "seq_count",               # seglead hot-key gate (r12)
-        "funnel_steps_capped",     # first_n_per_key cap detector (r10)
-        "interval_max_concurrent", # session_stats -> sessionize gate
-        "interval_length_sum",     # sessionize gate (string keys)
-        "seq_next_node",           # seglead hot-key gate (r12)
-        "win_running_distinct",    # running-distinct gate (r12)
-        "sim_neardup",             # sub-cell vocabulary detector (r12)
-        "timeseries_gaps",         # inter-arrival hot-type gate (r16)
-        # r16 measurement-bug fix (OPTIMIZATION_r16.md "Timed-window
-        # accounting"): under AQE, Dataset.localCheckpoint(eager=False)
-        # executes every upstream shuffle stage AT THE CALL, i.e.
-        # during plan construction — so the r15/r16 materialize-once
-        # rewrites leaked real work out of the write-only timer
-        # (measured: mad 5 jobs / ~1.1 s, pagerank 6 jobs / ~2.0 s,
-        # triangles 6 jobs / ~0.9 s of construction-time execution).
-        # Planning those subtrees with AQE disabled (so they run
-        # lazily inside the timed write) was tried and REVERTED: the
-        # interleaved full-window A/B read 1.2-3.5x SLOWER without
-        # AQE's runtime join conversions + coalescing (pagerank 1.87
-        # vs 4.06 s, triangles 0.66 vs 2.28 s — materialize.py
-        # docstring has the full table).  So the fast AQE planning
-        # stays and the accounting moves here: every id whose
-        # construction reaches a materialize() site with a shuffle
-        # below it (probed per id: tools/probe_construct_jobs.py)
-        # starts its timer before construction.
-        "timeseries_mad",          # chained count-table checkpoints (r15)
-        "graph_pagerank",          # edge/node/degree checkpoints (r15)
-        "graph_triangles",         # edge + oriented-edge checkpoints (r15)
-        "text_lm_score",           # bigram count-table checkpoint (r15)
-        "agg_assoc_suite",         # contingency-cell checkpoint (r16)
-        "corpus_overlap",          # shingle source-set checkpoint (r16)
-        "text_tfidf",              # (doc,term) tf checkpoint (r16)
-        # dedup_ngram_jaccard / split_leakage_check / sample_dsir also
-        # materialize, but their checkpointed subtrees are narrow (no
-        # shuffle below) — nothing executes at construction (probe:
-        # 1 listing job only), so they keep the write-only window.
-    }
-
-    # The parse plane's generated projection is enormous; HotSpot's
-    # tiered compilation of it stalls executor threads for tens of
-    # seconds at unpredictable points — runs measured 2.6-35s for a
-    # ~2.6s steady-state query, pure JIT noise (steal time ~0, no
-    # cgroup throttling, codegen-off is slower AND still erratic).
-    # r8 root-cause attempt (fresh-JVM A/B, 3 runs x 5+ JVMs each):
-    # LogCompilation shows NO single huge method — the projection
-    # splits into hundreds of SpecificUnsafeProjection methods, each
-    # compiling in 0.5-1.2s, and the slowdown is their C2 scheduling
-    # racing the 32 executor threads, striking any run (including
-    # re-executions) with ~1/3 probability per JVM.  Measured and
-    # rejected: methodSplitThreshold 128/256 (storm moves, stays),
-    # CICompilerCount=16 + 512m code cache (no change), 3x warmup +
-    # 2s compile-queue drain (worse — more recompilation churn).
-    # TieredStopAtLevel would stabilize it but slows every OTHER
-    # query's steady state session-wide.  So best-of-N stays for these
-    # queries (every run is a full real execution; min is the standard
-    # noise-robust throughput estimator) — everything else keeps the
-    # single-run window.
-    best_of = {
-        "parse_scaled": 3,
-        # NOTE: dedup_components was best-of-2 while each run repeated
-        # the CC fit; now the trio shares one memoized fit
-        # (queries/curation_q.py _dup_cluster_labels), so a repeat would
-        # hit the cache and min() would hide the one-time fit cost.
-        # Single-run keeps the fit charged exactly once, where the first
-        # trio member pays it — the production fit-once shape.
-        # 3-7x run-to-run swings observed across otherwise-identical
-        # rounds (2.7-9.9 s at sf0.1) — same JIT/GC noise class as
-        # parse_scaled, both are Python-UDF + multi-stage shapes
-        "sim_srp_lsh": 2,
-        "text_tfidf": 2,
-    }
-
-    import gc
-
-    timings: dict[str, float] = {}
+    construct: dict[str, float] = {}
+    execute: dict[str, float] = {}
     for name in names:
-        runs: list[float] = []
-        for _ in range(best_of.get(name, 1)):
-            if name in eager_construction:
-                t0 = time.perf_counter()
-                df = queries[name](spark, sf_dir)
-            else:
-                df = queries[name](spark, sf_dir)
-                t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        timings[name] = round(min(runs), 4)
-        # per-query isolation OUTSIDE the timed window: drop the plan,
-        # release py4j-held broadcasts / localCheckpoint blocks, and
-        # nudge both GCs — otherwise driver-heap bloat from 35+ prior
-        # queries inflates the tail of the run by 3-10x
-        del df
+        construct[name], execute[name] = time_query(spark, queries[name], sf_dir)
+        # per-query isolation OUTSIDE the timed window: release py4j-held
+        # broadcasts / localCheckpoint blocks and nudge both GCs, or
+        # driver-heap bloat from prior queries inflates the tail of the
+        # run by 3-10x
         spark.catalog.clearCache()
         gc.collect()
         spark._jvm.System.gc()
 
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
-    total = round(sum(timings.values()), 4)
-    # like-for-like subtotal over the r8/r9 164-id headline prefix so
-    # round-over-round comparisons survive the r10 full-registry extension
-    head164 = set(HEADLINE[:_HEADLINE_164])
-    total_164 = round(sum(v for k, v in timings.items() if k in head164), 4)
-    detail = {
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "value_headline164": total_164,
-        "canary_sec": canary_sec,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-    }
-    # The driver tail-captures stdout: a single multi-KB JSON line gets its
-    # HEAD clipped and fails to parse (this silently deleted r03-r05's perf
-    # signal).  So: per-query detail goes to a file AND is printed FIRST;
-    # the LAST line is a compact object guaranteed to survive tail capture.
+    detail = bench_detail(construct, execute, canary_sec, sf)
+    # The detail goes to a file AND is printed first; the LAST line is the
+    # compact one.  A second copy is keyed on the session's parallelism,
+    # so sweeps at several core counts keep each other's detail.
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
-    # r16 (VERDICT r15 "What's wrong #4"): the driver benches the same
-    # round at several core counts and each run overwrites
-    # BENCH_DETAIL.json — the r15 32-core per-id detail was lost to the
-    # subsequent 8-core sweep.  Keep a per-variant copy keyed on the
-    # core count so every sweep's detail survives the next one.
-    # Purely additive: same data, one extra file, stdout unchanged.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    variant_path = detail_path.replace(".json", f"_c{cpus}.json")
+    cores = spark.sparkContext.defaultParallelism
+    variant_path = detail_path.replace(".json", f"_c{cores}.json")
     for path in (detail_path, variant_path):
         try:
             with open(path, "w") as f:
@@ -458,20 +379,7 @@ def main() -> None:
             pass  # detail files are best-effort; stdout lines are the contract
     print(json.dumps(detail))
     sys.stdout.flush()
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_wall",
-                "value": total,
-                "value_headline164": total_164,
-                "canary_sec": canary_sec,
-                "unit": "sec",
-                "sf": sf,
-                "n_queries": len(timings),
-                "queries_detail": "BENCH_DETAIL.json",
-            }
-        )
-    )
+    print(final_line(detail))
 
 
 if __name__ == "__main__":

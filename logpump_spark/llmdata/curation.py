@@ -439,16 +439,16 @@ def source_overlap_matrix(
     # ReusedExchange to share it across the three consumers (sizes +
     # pair counts + the final join), but the executed AQE plan shows
     # zero ReusedExchange: the whole tokenize/shingle/explode/agg plane
-    # ran 3x (plans/r16/corpus_overlap_executed_before.txt: 6 scans,
-    # 6 Generates, 6 exchanges).  Full-window interleaved A/B
-    # (materialization charged to the same timed region as the rest,
-    # medians of 5): sf0.1 1.27 -> 1.15 s (0.90x), decade
-    # 2.37 -> 2.26 s (0.95x) wall — modest locally because the three
-    # duplicate planes ran concurrently on idle cores; the total WORK
-    # (scans, explodes, shuffles) drops 3x -> 1x, which is what counts
-    # when the cluster is not idle.  The materialized frame is the
-    # post-aggregation distinct-shingle table — the same bytes the
-    # query already shuffles once, persisted instead of recomputed.
+    # ran 3x (executed plan: 6 scans, 6 Generates, 6 exchanges).
+    # Full-window interleaved A/B (materialization charged to the same
+    # timed region as the rest, medians of 5): sf0.1 1.27 -> 1.15 s
+    # (0.90x), decade 2.37 -> 2.26 s (0.95x) wall — modest locally
+    # because the three duplicate planes ran concurrently on idle cores;
+    # the total WORK (scans, explodes, shuffles) drops 3x -> 1x, which
+    # is what counts when the cluster is not idle.  The materialized
+    # frame is the post-aggregation distinct-shingle table — the same
+    # bytes the query already shuffles once, persisted instead of
+    # recomputed.
     srcsets_all = _mat(
         sh.groupBy("sh").agg(F.array_sort(F.collect_set("src")).alias("ss"))
     )

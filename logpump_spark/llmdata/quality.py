@@ -214,12 +214,12 @@ def bigram_lm_score(
     score-back join, and the model build consumed ``c2`` twice (once
     directly, once through the unigram re-aggregation) — the
     explode+shuffle subtree executed THREE times per run
-    (plans/r15/text_lm_score_before.txt: 3 Generate nodes, zero
-    runtime reuse).  Now ``cd`` is materialized once (localCheckpoint,
-    the ranged_blocks precedent — it is the pipeline's already-reduced
-    count table) and the unigram divisor comes from a window sum over
-    ``c2`` partitioned by w1 (same int64 value as the dropped
-    c1-join — sum(c2) group-by w1 — so p is bit-identical).
+    (3 Generate nodes, zero runtime reuse).  Now ``cd`` is materialized
+    once (localCheckpoint, the ranged_blocks precedent — it is the
+    pipeline's already-reduced count table) and the unigram divisor
+    comes from a window sum over ``c2`` partitioned by w1 (same int64
+    value as the dropped c1-join — sum(c2) group-by w1 — so p is
+    bit-identical).
     Interleaved A/B at sf0.1: 2.08 -> 1.52 s (0.73x), results exact."""
     # materialize the split ONCE: the explode child references toks at
     # four leaf positions, and higher-order expressions are interpreted

@@ -725,7 +725,7 @@ def embedding_neardup_pairs(
     group is a subset of a label cell, so the bound transfers).  The
     cap filter is a no-op exactly then, but the plan it compiled was
     not: both join sides re-ran a per-cell rank window + its exchange
-    (plans/r16/sim_neardup_executed_before.txt: 2 Window sorts).
+    (2 Window sorts in the executed plan).
     Results are identical by construction (pinned in
     tests/test_densifier_scaling.py::test_cap_window_skipped_when_
     provably_slack); a corpus whose largest cell exceeds the cap keeps

@@ -36,8 +36,7 @@ def max_concurrent_intervals(
     expensive subtree (a sessionize window over the corpus), and the
     old union-of-two-selects form embedded it TWICE, while the carry
     pass and the within-hour pass each re-planned the union — FOUR
-    full sessionize executions per run (plans/r15/
-    interval_max_concurrent_before.txt).  Now one explode emits both
+    full sessionize executions per run.  Now one explode emits both
     boundaries in a single pass and the boundary table — 2 rows x 3
     longs per interval, corpus-REDUCED and narrow — is materialized
     once (localCheckpoint, the ranged_blocks precedent) so both prefix

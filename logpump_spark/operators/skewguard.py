@@ -139,8 +139,8 @@ def first_n_per_key(
     ``window_funnel`` reference the capped frame once per step, and
     un-materialized each reference re-ran the whole gate — detector
     broadcast, flag join, both ranking windows — so a 3-step funnel
-    executed the corpus scan + 2 window sorts EIGHT times
-    (plans/r15/funnel_steps_capped_before.txt: 56 parquet scans).
+    executed the corpus scan + 2 window sorts EIGHT times (56 parquet
+    scans in the plan).
     The capped output is <= n rows per key at ANY corpus size — the
     cap that makes the operator scale-safe is exactly what makes the
     materialization scale-safe.  Measured: funnel_steps_capped

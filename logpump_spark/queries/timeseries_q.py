@@ -11,6 +11,7 @@ from ..operators.materialize import materialize as _mat
 from ..operators.timeseries import (
     ewma_daily,
     gap_fill_daily,
+    inter_arrival_gaps,
     ohlc_resample,
     zscore_anomalies,
 )
@@ -235,16 +236,14 @@ def timeseries_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak) — the burstiness/SLA report over the techlog stream.
     Exact percentiles on int64 gaps: both engines interpolate
     identically on integers, with the result floored back to int64."""
-    from ..operators.timeseries import inter_arrival_gaps
-
-    # r16 (VERDICT r15 item 2): the gap stream comes from the
-    # count-gated operator — the uniform bench/oracle fixtures compile
-    # the identical plain per-type LAG plan (max type ~20k rows at
-    # sf0.1, gate 1M), while a corpus whose per-type volume makes the
-    # single-task sort the stage wall routes through segmented range
-    # blocks (exact multiset; operators/timeseries.py docstring).  The
-    # gate detector runs at plan build — frozen-route contract, charged
-    # to the bench timer like every other gated id.
+    # The gap stream comes from the count-gated operator — the uniform
+    # bench/oracle fixtures compile the identical plain per-type LAG
+    # plan (max type ~20k rows at sf0.1, gate 1M), while a corpus whose
+    # per-type volume makes the single-task sort the stage wall routes
+    # through segmented range blocks (exact multiset;
+    # operators/timeseries.py docstring).  The gate detector runs at plan
+    # build (frozen-route contract), so the bench charges it as
+    # construction time.
     ev = load(spark, sf_dir, "events")
     gaps = inter_arrival_gaps(ev, "event_type", "ts", "event_id")
     return (
@@ -295,7 +294,7 @@ def timeseries_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders rows WITHIN one qv (or ad) value, so it never changes which
     value sits at the median rank: the lower median is the smallest
     value whose cumulative multiplicity reaches ceil(n/2).  The before
-    shape (plans/r15/timeseries_mad_before.txt) scanned the corpus 4x
+    shape scanned the corpus 4x
     and ran 4 corpus-sized window sorts; now 1 scan, 1 corpus shuffle
     of pre-reduced counts, windows over distinct values only."""
     ev = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())

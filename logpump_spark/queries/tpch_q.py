@@ -631,7 +631,7 @@ def tpch_q2_min_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     - the decorrelated plan computed the supply CTE TWICE (two full
       lineitem scans + two (partkey, suppkey) agg shuffles — zero
-      ReusedExchange, plans/r16/tpch_q2_min_cost_executed_before.txt)
+      ReusedExchange in the executed plan)
       and joined the per-part MIN back over a SortMergeJoin; the
       correlated MIN per part IS the window min over the same joined
       relation, so one supply pass + MIN() OVER (PARTITION BY partkey)

@@ -474,11 +474,11 @@ def test_lttb_exact_aggregates_before_pandas_shuffle(spark):
 def test_interval_boundaries_single_pass_and_materialized(spark):
     """r15: both interval sweeps emit (start,+1)/(end,-1) boundaries via
     ONE explode over the interval subtree instead of a self-union that
-    re-ran it per branch (plans/r15/interval_*_before.txt: the
-    sessionize window executed 4x in max_concurrent).  Pins: no Union
-    in either final plan; max_concurrent's boundary table — consumed by
-    both prefix-scan stages — is a truncated-lineage RDD scan
-    (localCheckpoint), so the upstream runs once."""
+    re-ran it per branch (the sessionize window executed 4x in
+    max_concurrent).  Pins: no Union in either final plan;
+    max_concurrent's boundary table — consumed by both prefix-scan
+    stages — is a truncated-lineage RDD scan (localCheckpoint), so the
+    upstream runs once."""
     from logpump_spark.queries.intervals_q import (
         interval_length_sum,
         interval_max_concurrent,
@@ -505,7 +505,7 @@ def test_q2_single_supply_pass_window_min(spark):
     per-part MIN aggregate + SortMergeJoin join-back with a window min;
     the part predicate pre-filters lineitem below the agg via a
     broadcast LeftSemi (§3.2).  Interleaved A/B at sf0.1: 1.44 ->
-    0.55 s; hash exchanges 7 -> 2 (plans/r16/tpch_q2_*_executed_*)."""
+    0.55 s; hash exchanges 7 -> 2 in the executed plan."""
     from logpump_spark.queries.tpch_q import tpch_q2_min_cost
 
     df = tpch_q2_min_cost(spark, SF_SMALL)

@@ -615,13 +615,14 @@ def test_timing_sketch_cells_merge_across_micro_batches(spark, tmp_path):
 
 
 def test_stream_parse_plane_has_no_repartition(spark, tmp_path):
-    # r14: parse_records defaults to the split projection (one
-    # round-robin exchange) for batch, but the long-lived pump passes
-    # split_stages=False — the storm it avoids amortizes once per
-    # process while the exchange would recur EVERY micro-batch.  Pin
-    # the streaming plan exchange-free in the parse region so a future
-    # edit reverting the call site fails here, with a positive control
-    # proving the detector would see the exchange if it came back.
+    # parse_records uses the split projection (one round-robin
+    # exchange) for a batch frame, but the fused shape for a streaming
+    # one (it reads df.isStreaming) — the storm the split avoids
+    # amortizes once per process while the exchange would recur EVERY
+    # micro-batch.  Pin the streaming plan exchange-free in the parse
+    # region so a future edit to that choice fails here, with a
+    # positive control proving the detector would see the exchange if
+    # it came back.
     d = _dirs(tmp_path)
     writer = build_techlog_stream(
         spark, d["in"], d["out"], d["ckpt"],

@@ -243,10 +243,10 @@ def test_crlf_records(spark, tmp_path):
 
 
 def test_split_and_fused_projection_shapes_identical(spark, logdir):
-    # r14: parse_records compiles as two codegen units by default (the
-    # C2-storm plan-shape fix); the fused single-projection form stays
-    # reachable via split_stages=False / the session conf — both shapes
-    # must produce identical rows and schema on the golden corpus
+    # parse_records compiles a batch frame as two codegen units (the
+    # C2-storm plan-shape fix) and a streaming frame, or an explicit
+    # split_stages=False, as one fused projection — both shapes must
+    # produce identical rows and schema on the golden corpus
     files = read_techlog(spark, logdir, glob="*.log")
     recs = records_from_text(files)
     split = parse_records(recs, split_stages=True).drop("InsertedAt")

@@ -1,5 +1,5 @@
 """r16 A/B: pagerank_int loop-shape variants, full graph_pagerank
-query (construct + noop write — pagerank is eager_construction) in
+query (construct + noop write, the bench.py timing rule) in
 interleaved single-JVM arms.
 
 Arms:

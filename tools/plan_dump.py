@@ -1,8 +1,8 @@
 """Dump `.explain("formatted")` of named registry queries to files —
 the before/after plan evidence for optimization rounds.
 
-Run: python -m tools.plan_dump --out plans/r15 --suffix _before id1 id2 ...
-(no ids = a default r15 watch list).  Plans are captured at construction
+Run: python -m tools.plan_dump --out <dir> --suffix _before id1 id2 ...
+(no ids = a default watch list).  Plans are captured at construction
 time (AdaptiveSparkPlan isFinalPlan=false) at --sf, the same artifact
 `df.explain("formatted")` prints; construction-time fits/detector jobs
 run as they would for the driver.
@@ -54,7 +54,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("ids", nargs="*", default=None)
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="plans/r15")
+    ap.add_argument("--out", required=True)
     ap.add_argument("--suffix", default="_before")
     args = ap.parse_args()
     ids = args.ids or DEFAULT_IDS
