@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load
-from ..techlog.parser import header_map, parse_int32, parse_uint, split_record, _U8_MAX, _U32_MAX
+from ..techlog.parser import header_fields, header_value, parse_int32, parse_uint, split_record, _U8_MAX, _U32_MAX
 from ..techlog.reader import _SPLIT_REGEX
 
 _N = 1500  # events subset: keep oracle SQL runtimes sane
@@ -224,22 +224,18 @@ def parse_header_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def parse_kv_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3: key=value map extraction with quote/space trim + silent-zero
-    numerics (parser.go:80-86, :98-116) via the real header_map."""
+    numerics (parser.go:80-86, :98-116) via the real header lookup."""
     df = _events_with_record(spark, sf_dir)
     header, _sql, _ctx = split_record(F.col("record"))
-    m = header_map(header)
-
-    def hv(k: str):
-        return F.coalesce(F.element_at(m, F.lit(k)), F.lit(""))
-
+    hdr = header_fields(header)
     return df.select(
         "event_id",
-        hv("Usr").alias("usr"),
-        hv("DataBase").alias("infobase"),
-        hv("process").alias("process"),
-        parse_uint(hv("SessionID"), (1 << 63) - 1).alias("session_id"),
-        parse_int32(hv("Rows")).alias("rows_parsed"),
-        hv("missing").alias("missing_key"),
+        header_value(hdr, "Usr").alias("usr"),
+        header_value(hdr, "DataBase").alias("infobase"),
+        header_value(hdr, "process").alias("process"),
+        parse_uint(header_value(hdr, "SessionID"), (1 << 63) - 1).alias("session_id"),
+        parse_int32(header_value(hdr, "Rows")).alias("rows_parsed"),
+        header_value(hdr, "missing").alias("missing_key"),
     ).orderBy("event_id")
 
 

@@ -24,11 +24,9 @@ Faithful to /root/reference/internal/parser/*.go, field by field:
   MinInt32 by sign — and since the reference ignores the error, the
   saturated value is what lands in the row
 
-Everything stays in whole-stage codegen, and no session conf is touched:
-Go's last-duplicate-wins map overwrite (parser.go:84) is expressed by
-dropping earlier duplicates from the entries array before
-map_from_entries, instead of mutating spark.sql.mapKeyDedupPolicy on a
-possibly-shared session.
+No session conf is touched.  Go's last-duplicate-wins map overwrite
+(parser.go:84) is a lookup in the REVERSED key array: its first hit is
+the last duplicate, so there is no dedup pass and no map column.
 """
 
 from __future__ import annotations
@@ -39,27 +37,6 @@ from pyspark.sql import functions as F
 _U8_MAX = 255
 _U32_MAX = 4_294_967_295
 _I32_MIN, _I32_MAX = -2_147_483_648, 2_147_483_647
-
-# keys projected out of the header map (parser.go:17-43); everything else
-# is silently dropped, missing keys default to '' (parser.go:91-96)
-HEADER_KEYS = {
-    "Level": "level",
-    "Process": "process",
-    "ProcessName": "p:processName",
-    "OSThread": "OSThread",
-    "ClientID": "t:clientID",
-    "ApplicationName": "t:applicationName",
-    "ComputerName": "t:computerName",
-    "ConnectID": "t:connectID",
-    "SessionID": "SessionID",
-    "User": "Usr",
-    "DBMS": "DBMS",
-    "Database": "DataBase",
-    "Trans": "Trans",
-    "DBPID": "dbpid",
-    "EventType": "Event",
-    "File": "File",
-}
 
 
 def parse_uint(s: Column, max_value: int) -> Column:
@@ -174,77 +151,78 @@ def split_record(rec: Column) -> tuple[Column, Column, Column]:
     return header_part, sql_text, context_text
 
 
-def header_map(header_part: Column) -> Column:
-    """key=value pairs from comma parts 3.. (parser.go:80-86): key
-    space-trimmed, value trimmed of spaces and single quotes, first '='
-    splits, '=' at position 0 skipped, last duplicate wins."""
+def header_fields(header_part: Column) -> tuple[Column, Column]:
+    """-> (keys, values) of the key=value comma parts 3.. (parser.go:80-86),
+    both in REVERSE order: first '=' splits, '=' at position 0 skipped,
+    key space-trimmed, value trimmed of spaces and single quotes.
+    ``values`` leads with one extra '' that ``header_value`` reads for a
+    missing key."""
     parts = F.split(header_part, ",")
     kv = F.slice(parts, 4, F.greatest(F.size(parts) - 3, F.lit(0)))
     # Go: eq := strings.Index(part, "="); eq > 0  => at least one char
     # before the '=' (1-based instr > 1)
-    valid = F.filter(kv, lambda p: F.instr(p, "=") > 1)
-    entries = F.transform(
+    valid = F.reverse(F.filter(kv, lambda p: F.instr(p, "=") > 1))
+    keys = F.transform(valid, lambda p: F.trim(p.substr(F.lit(1), F.instr(p, "=") - 1)))
+    values = F.transform(
         valid,
-        lambda p: F.struct(
-            F.trim(p.substr(F.lit(1), F.instr(p, "=") - 1)).alias("key"),
-            F.regexp_replace(
-                F.regexp_replace(
-                    p.substr(F.instr(p, "=") + 1, F.length(p)),
-                    r"^[ ']+",
-                    "",
-                ),
-                r"[ ']+$",
-                "",
-            ).alias("value"),
+        lambda p: F.regexp_replace(
+            F.regexp_replace(p.substr(F.instr(p, "=") + 1, F.length(p)), r"^[ ']+", ""),
+            r"[ ']+$",
+            "",
         ),
     )
-    # Go map assignment overwrites on duplicate keys (parser.go:84):
-    # keep only the LAST occurrence of each key.  Done in-expression (an
-    # entry survives iff no later entry shares its key) so the default
-    # EXCEPTION dedup policy never fires and no session conf is mutated.
-    # O(k^2) over the ~16 header keys of one record — stays in codegen.
-    last_wins = F.filter(
-        entries,
-        lambda e, i: ~F.exists(
-            F.slice(entries, i + 2, F.size(entries)),
-            lambda later: later["key"] == e["key"],
-        ),
-    )
-    return F.map_from_entries(last_wins)
+    return keys, F.concat(F.array(F.lit("")), values)
 
 
-def _entry_cols(hv, pos, fn: Column, sql_text: Column, context_text: Column) -> list[Column]:
-    """The 24 LogEntry output expressions (models.go:8-34) over accessor
-    callables, so the fused and split projection shapes share one
-    definition.  ``hv(go_key)`` = header value or '' (parser.go:91-96);
-    ``pos(i)`` = trimmed positional field or '' (Go guards each with a
-    len(parts) check, parser.go:71-77 -> try_element_at, missing -> '')."""
+def header_value(fields: tuple[Column, Column], go_key: str) -> Column:
+    """Header value of ``go_key`` or '' (parser.go:91-96) from
+    ``header_fields``.  The keys are reversed, so the first hit is the
+    LAST duplicate, the one a Go map overwrite keeps (parser.go:84).
+    array_position is 0 on a miss, and the +1 that steps over the leading
+    '' makes a miss read it: element_at raises on index 0."""
+    keys, values = fields
+    idx = (F.array_position(keys, go_key) + 1).cast("int")
+    return F.coalesce(F.element_at(values, idx), F.lit(""))
+
+
+def _entry_cols(
+    hdr: tuple[Column, Column], parts: Column, fn: Column, sql_text: Column, context_text: Column
+) -> list[Column]:
+    """The 24 LogEntry output expressions (models.go:8-34), shared by the
+    fused and split projection shapes.  ``hdr`` = ``header_fields``;
+    ``parts`` = the header's comma parts, whose positional field ``pos(i)``
+    is trimmed or '' (Go guards each with a len(parts) check,
+    parser.go:71-77 -> try_element_at, missing -> '')."""
+
+    def pos(i: int) -> Column:
+        return F.coalesce(F.trim(F.try_element_at(parts, F.lit(i))), F.lit(""))
+
     return [
         fn.alias("Timestamp"),  # filename (tail.go:77)
         pos(1).alias("LogTimestamp"),
         pos(2).alias("Component"),
         parse_uint(pos(3), _U8_MAX).cast("smallint").alias("Severity"),
-        hv("level").alias("Level"),
-        hv("process").alias("Process"),
-        hv("p:processName").alias("ProcessName"),
-        parse_uint(hv("OSThread"), _U32_MAX).alias("OSThread"),
-        parse_uint(hv("t:clientID"), _U32_MAX).alias("ClientID"),
-        hv("t:applicationName").alias("ApplicationName"),
-        hv("t:computerName").alias("ComputerName"),
-        parse_uint(hv("t:connectID"), _U32_MAX).alias("ConnectID"),
-        # ParseUint 64-bit; long covers 1C's realistic range, overflow -> 0
-        parse_uint(hv("SessionID"), (1 << 63) - 1).alias("SessionID"),
-        hv("Usr").alias("User"),
-        hv("DBMS").alias("DBMS"),
-        hv("DataBase").alias("Database"),
-        parse_uint(hv("Trans"), _U32_MAX).alias("Trans"),
-        parse_uint(hv("dbpid"), _U32_MAX).alias("DBPID"),
+        header_value(hdr, "level").alias("Level"),
+        header_value(hdr, "process").alias("Process"),
+        header_value(hdr, "p:processName").alias("ProcessName"),
+        parse_uint(header_value(hdr, "OSThread"), _U32_MAX).alias("OSThread"),
+        parse_uint(header_value(hdr, "t:clientID"), _U32_MAX).alias("ClientID"),
+        header_value(hdr, "t:applicationName").alias("ApplicationName"),
+        header_value(hdr, "t:computerName").alias("ComputerName"),
+        parse_uint(header_value(hdr, "t:connectID"), _U32_MAX).alias("ConnectID"),
+        # ParseUint 64-bit; overflow saturates to long max (parse_uint)
+        parse_uint(header_value(hdr, "SessionID"), (1 << 63) - 1).alias("SessionID"),
+        header_value(hdr, "Usr").alias("User"),
+        header_value(hdr, "DBMS").alias("DBMS"),
+        header_value(hdr, "DataBase").alias("Database"),
+        parse_uint(header_value(hdr, "Trans"), _U32_MAX).alias("Trans"),
+        parse_uint(header_value(hdr, "dbpid"), _U32_MAX).alias("DBPID"),
         sql_text.alias("SQL"),
-        parse_int32(hv("Rows")).alias("Rows"),
-        parse_int32(hv("RowsAffected")).alias("RowsAffected"),
+        parse_int32(header_value(hdr, "Rows")).alias("Rows"),
+        parse_int32(header_value(hdr, "RowsAffected")).alias("RowsAffected"),
         context_text.alias("Context"),
-        hv("Event").alias("EventType"),
-        hv("File").alias("File"),
+        header_value(hdr, "Event").alias("EventType"),
+        header_value(hdr, "File").alias("File"),
         F.current_timestamp().alias("InsertedAt"),
     ]
 
@@ -261,11 +239,11 @@ def parse_records(
     InsertedAt = current_timestamp(), parser.go:42).
 
     ``split_stages`` picks the projection shape; both give identical
-    rows.  Split puts the shared intermediates (header map, positional
-    parts, SQL tail, Context tail) behind one round-robin exchange, so
-    the projection compiles as two half-size codegen units and avoids
-    the parse-plane C2 compile storm (BASELINE.md).  Fused is one
-    projection with no exchange.  ``None`` picks split for a batch
+    rows.  Split puts the shared intermediates (header keys and values,
+    positional parts, SQL tail, Context tail) behind one round-robin
+    exchange, so the projection compiles as two half-size codegen units
+    and avoids the parse-plane C2 compile storm (BASELINE.md).  Fused is
+    one projection with no exchange.  ``None`` picks split for a batch
     ``df`` and fused for a streaming one: a long-lived pump pays the
     storm once per process, but the exchange on every micro-batch
     (SCALING.md §10.3-10.4).
@@ -273,36 +251,32 @@ def parse_records(
     rec = F.col(record_col)
     header_part, sql_text, context_text = split_record(rec)
     parts = F.split(header_part, ",")
-    m = header_map(header_part)
+    keys, values = header_fields(header_part)
     keep = [c for c in df.columns if c not in (record_col, filename_col)]
     if split_stages is None:
         split_stages = not df.isStreaming
     if not split_stages:
-        def hv(go_key: str) -> Column:
-            return F.coalesce(F.element_at(m, go_key), F.lit(""))
-
-        def pos(i: int) -> Column:
-            return F.coalesce(F.trim(F.try_element_at(parts, F.lit(i))), F.lit(""))
-
         return df.select(
-            *keep, *_entry_cols(hv, pos, F.col(filename_col), sql_text, context_text)
+            *keep,
+            *_entry_cols((keys, values), parts, F.col(filename_col), sql_text, context_text),
         )
 
     try:
         par = df.sparkSession.sparkContext.defaultParallelism
     except Exception:  # Connect sessions expose no sparkContext
-        # fall back to the session's shuffle width, not a literal — a
-        # hardcoded 32 would underpartition the parse stage on a large
-        # cluster driven through Connect (ADVICE r14)
+        # fall back to the session's shuffle width, not a literal: a
+        # hardcoded width would underpartition the parse stage on a
+        # large cluster driven through Connect
         par = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
         )
     # __lp_-prefixed intermediates so a passthrough column in `keep`
     # cannot collide and turn into an ambiguous-reference
-    # AnalysisException that only the split shape would hit (ADVICE r14)
-    _fn, _m, _p, _sql, _ctx = (
+    # AnalysisException that only the split shape would hit
+    _fn, _k, _v, _p, _sql, _ctx = (
         "__lp_parse_fn",
-        "__lp_parse_m",
+        "__lp_parse_k",
+        "__lp_parse_v",
         "__lp_parse_p",
         "__lp_parse_sql",
         "__lp_parse_ctx",
@@ -310,19 +284,15 @@ def parse_records(
     mid = df.select(
         *keep,
         F.col(filename_col).alias(_fn),
-        m.alias(_m),
+        keys.alias(_k),
+        values.alias(_v),
         parts.alias(_p),
         sql_text.alias(_sql),
         context_text.alias(_ctx),
     ).repartition(par)
-
-    def hv(go_key: str) -> Column:
-        return F.coalesce(F.element_at(F.col(_m), go_key), F.lit(""))
-
-    def pos(i: int) -> Column:
-        return F.coalesce(F.trim(F.try_element_at(F.col(_p), F.lit(i))), F.lit(""))
-
     return mid.select(
         *keep,
-        *_entry_cols(hv, pos, F.col(_fn), F.col(_sql), F.col(_ctx)),
+        *_entry_cols(
+            (F.col(_k), F.col(_v)), F.col(_p), F.col(_fn), F.col(_sql), F.col(_ctx)
+        ),
     )

@@ -12,9 +12,9 @@ so instead of append-tailing (Spark file sources treat files as immutable)
 we process rotated files WHOLE via the ``wholetext`` text source — one row
 per file, then a regex split + posexplode assembles records inside the
 executors.  Parallelism = one task per file; an hourly 1C log is at most a
-few hundred MB, well within executor memory.  For sub-hour latency the
-streaming job re-reads the current hour idempotently and dedups on
-(file, record) — see streaming/job.py.
+few hundred MB, well within executor memory.  The streaming job
+(streaming/job.py) builds on Spark's file source, which reads each path
+once: lines appended to a file after it was read are not picked up.
 """
 
 from __future__ import annotations

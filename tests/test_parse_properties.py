@@ -1,6 +1,7 @@
 """Property-based tests: the Column-expression parser vs a direct Python
 model of the Go semantics (strconv grammar, ParseLogRecord splitting,
-extractSQL escape scan, extractContext last-quote).
+header key=value fields, extractSQL escape scan, extractContext
+last-quote).
 
 The Python models here are TEST ORACLES transliterating the documented
 behavior of /root/reference/internal/parser/*.go for verification only —
@@ -67,6 +68,20 @@ def go_extract_context(s: str) -> str:
     ctx = s[idx + len(",Context='") :]
     end = ctx.rfind("'")
     return ctx if end == -1 else ctx[:end]
+
+
+def go_header(header: str) -> dict[str, str]:
+    # parser.go:68-96: skip the 3 positional fields, split each part at
+    # its first '=', skip '=' at position 0, key trimmed of spaces, value
+    # of spaces and single quotes; a map assignment, so the last
+    # duplicate wins
+    fields = {}
+    for part in header.split(",")[3:]:
+        eq = part.find("=")
+        if eq <= 0:
+            continue
+        fields[part[:eq].strip(" ")] = part[eq + 1 :].strip(" '")
+    return fields
 
 
 def go_split_record(raw: str) -> tuple[str, str, str]:
@@ -147,12 +162,12 @@ def test_split_record_matches_go(spark, bodies):
 
 
 # ---------------------------------------------------------------------------
-# r14: the split (two-codegen-stage) and fused projection shapes of the
-# FULL 24-field parse_records must agree on arbitrary record bodies, not
-# just the golden corpus — same expressions over the same intermediates
-# is the correctness argument for the C2-storm plan-shape fix, so pin it
-# property-style where the golden file can't reach (adversarial quoting,
-# truncated headers, unicode, embedded newlines).
+# The split (two-codegen-stage) and fused projection shapes of the FULL
+# 24-field parse_records must agree on arbitrary record bodies, not just
+# the golden corpus: same expressions over the same intermediates is the
+# correctness argument for the split shape, so pin it property-style
+# where the golden file can't reach (adversarial quoting, truncated
+# headers, unicode, embedded newlines).
 
 
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
@@ -169,3 +184,66 @@ def test_parse_records_split_and_fused_agree(spark, bodies):
     assert split.schema == fused.schema
     key = lambda r: tuple(str(v) for v in r)
     assert sorted(split.collect(), key=key) == sorted(fused.collect(), key=key)
+
+
+# ---------------------------------------------------------------------------
+# Header fields: every header-valued LogEntry column of parse_records vs
+# go_header, over headers with duplicate keys at random positions, empty
+# values, keys padded with spaces and parts with no '=' or '=' first.
+
+_U32 = 4_294_967_295
+# LogEntry column -> (Go key, numeric model or None for the raw string)
+_HEADER_COLS = {
+    "Level": ("level", None),
+    "Process": ("process", None),
+    "ProcessName": ("p:processName", None),
+    "OSThread": ("OSThread", lambda v: go_parse_uint(v, _U32)),
+    "ClientID": ("t:clientID", lambda v: go_parse_uint(v, _U32)),
+    "ApplicationName": ("t:applicationName", None),
+    "ComputerName": ("t:computerName", None),
+    "ConnectID": ("t:connectID", lambda v: go_parse_uint(v, _U32)),
+    "SessionID": ("SessionID", lambda v: go_parse_uint(v, 2**63 - 1)),
+    "User": ("Usr", None),
+    "DBMS": ("DBMS", None),
+    "Database": ("DataBase", None),
+    "Trans": ("Trans", lambda v: go_parse_uint(v, _U32)),
+    "DBPID": ("dbpid", lambda v: go_parse_uint(v, _U32)),
+    "Rows": ("Rows", go_parse_int32),
+    "RowsAffected": ("RowsAffected", go_parse_int32),
+    "EventType": ("Event", None),
+    "File": ("File", None),
+}
+
+_key = st.sampled_from([k for k, _ in _HEADER_COLS.values()] + ["x", "usr", "Usr2"])
+_pad = st.sampled_from(["", " ", "  "])
+_kv_part = st.builds(
+    lambda a, k, b, v: f"{a}{k}{b}={v}",
+    _pad, _key, _pad,
+    st.text(alphabet=st.sampled_from(list("ab19 '=-+")), max_size=8),
+)
+_other_part = st.sampled_from(["", " ", "noeq", "=v", "= 1"])
+headers = st.lists(st.one_of(_kv_part, _kv_part, _other_part), max_size=14)
+
+
+@settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(headers, min_size=1, max_size=12))
+def test_header_fields_match_go(spark, header_lists):
+    from logpump_spark.techlog.parser import parse_records
+
+    records = [",".join(["07:18.000001-1", "CALL", "1", *h]) for h in header_lists]
+    df = spark.createDataFrame(
+        [(r, f"{i}.log") for i, r in enumerate(records)],
+        "record string, filename string",
+    )
+    want = []
+    for r in records:
+        fields = go_header(r)
+        want.append({
+            col: (model or (lambda v: v))(fields.get(key, ""))
+            for col, (key, model) in _HEADER_COLS.items()
+        })
+    for split_stages in (False, True):
+        got = parse_records(df, split_stages=split_stages).collect()
+        got = sorted(got, key=lambda row: int(row["Timestamp"].split(".")[0]))
+        for rec, g, w in zip(records, got, want):
+            assert {c: g[c] for c in _HEADER_COLS} == w, f"record {rec!r} split={split_stages}"

@@ -134,8 +134,9 @@ def test_silent_zero_and_escapes(entries):
 
 def test_duplicate_key_last_wins(spark):
     # Go map assignment overwrites on duplicate keys (parser.go:84);
-    # expressed conf-free via in-array dedup, so it must hold on a
-    # vanilla session with the default EXCEPTION dedup policy
+    # expressed conf-free as a lookup in the reversed key array, so it
+    # must hold on a vanilla session with the default EXCEPTION dedup
+    # policy
     df = spark.createDataFrame(
         [("07:18.000001-1,CALL,1,Usr=first,Trans=7,Usr=second", "25052607.log")],
         "record string, filename string",
@@ -257,11 +258,11 @@ def test_split_and_fused_projection_shapes_identical(spark, logdir):
 
 
 def test_split_shape_survives_collidable_passthrough_columns(spark, logdir):
-    # r15 (ADVICE r14): the split path's intermediates are now
-    # __lp_-prefixed — a passthrough column that happens to carry one
-    # of the OLD internal names (_m, _p, _sql...) must flow through the
-    # split shape unharmed instead of raising an ambiguous-reference
-    # AnalysisException only that shape would hit
+    # the split path's intermediates are __lp_-prefixed, so a
+    # passthrough column that carries a short internal-looking name
+    # (_m, _p, _sql...) must flow through the split shape unharmed
+    # instead of raising an ambiguous-reference AnalysisException only
+    # that shape would hit
     from pyspark.sql import functions as F
 
     files = read_techlog(spark, logdir, glob="*.log")
