@@ -23,7 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # Headline set: one per operator family — scan/agg, joins (shuffle,
 # broadcast, asof), windows, top-k, set ops, scalar suites, parse pipeline
-# and LLM-data ops (added by their milestones).
+# and LLM-data ops.  The list is append-only, so a subtotal over its
+# first ids keeps comparing like-for-like with older runs.
 HEADLINE = [
     "q1_pricing_summary",
     "join_inner",
@@ -49,7 +50,6 @@ HEADLINE = [
     "agg_stats",
     "udf_grouped_map",
     "multimodal_decode",
-    # r2 additions (list stays append-only for cross-round comparability)
     "parse_scaled",
     "dedup_components",
     "sim_srp_lsh",
@@ -63,14 +63,12 @@ HEADLINE = [
     "text_quality_gopher",
     "text_repetition",
     "embed_quantize_sq8",
-    # r4 additions
     "sim_pq_adc",
     "text_decontaminate",
     "corpus_vocab",
     "quality_decile_by_lang",
     "dedup_canonical",
     "sample_topp",
-    # late-r4 training-assembly additions
     "pack_sequences",
     "sample_temperature",
     "seq_match",
@@ -83,7 +81,6 @@ HEADLINE = [
     "corpus_merge",
     "multimodal_frames",
     "agg_sum_map",
-    # r4 tail additions
     "win_ntile",
     "timeseries_ewma",
     "freq_heavy_hitters",
@@ -114,7 +111,6 @@ HEADLINE = [
     "agg_skew_kurt",
     "agg_bitmap_distinct",
     "win_cume_dist",
-    # r5 additions
     "tpch_q3_shipping",
     "tpch_q5_nation_volume",
     "tpch_q6_revenue_delta",
@@ -154,7 +150,6 @@ HEADLINE = [
     "join_interval_bucketed",
     "setop_bag_ops",
     "win_running_distinct",
-    # r6 additions
     "tpch_q2_min_cost",
     "tpch_q11_important_stock",
     "tpch_q15_top_supplier",
@@ -172,7 +167,6 @@ HEADLINE = [
     "sim_ivf_recall",
     "win_moving_avg",
     "join_asof_tolerance",
-    # r7 additions
     "tpch_q13_cust_distribution",
     "tpch_q16_supplier_cnt",
     "tpch_q21_waiting_supplier",
@@ -193,23 +187,22 @@ HEADLINE = [
     "agg_assoc_suite",
     "timeseries_decay",
     "seq_match_window",
-    # r8 additions
     "skew_key_histogram",
     "funnel_steps_capped",
     "timeseries_lttb_exact",
 ]
 
-# Cross-round comparability marker: everything above is the r8/r9
-# 164-id headline set; bench output reports its subtotal separately
-# (value_headline164) so round-over-round deltas keep comparing
-# like-for-like after the r10 full-registry extension below.
+# Comparability marker: everything above is the original 164-id
+# headline set; bench output reports its subtotal separately
+# (value_headline164) so runs keep comparing like-for-like with runs
+# that timed only that set.
 _HEADLINE_164 = len(HEADLINE)
 
-# r10 additions: the 85 registry ids no prior round ever timed (r9
-# verdict item 1 — a regression in dedup_edit_distance /
-# join_skew_salted / dedup_simhash / multimodal_audio / the parse and
-# scalar suites was invisible to the bench gate).  HEADLINE now covers
-# the full 249-id registry; the list stays append-only.
+# The remaining 85 registry ids, so a regression in any of them
+# (dedup_edit_distance, join_skew_salted, dedup_simhash,
+# multimodal_audio, the parse and scalar suites) shows in the bench
+# gate.  HEADLINE covers the full 249-id registry; the list stays
+# append-only.
 HEADLINE += [
     "agg_approx_distinct", "agg_corr", "agg_cube", "agg_grouping_sets", "agg_percentile",
     "agg_pivot", "join_anti", "join_cross", "join_full_outer", "join_left",

@@ -29,15 +29,9 @@ query plan).
 
 from __future__ import annotations
 
-import io
 from dataclasses import dataclass, field
 
-try:
-    import yaml  # type: ignore
-
-    _HAVE_YAML = True
-except ImportError:  # minimal fallback parser below keeps us dependency-free
-    _HAVE_YAML = False
+import yaml
 
 
 @dataclass
@@ -85,39 +79,10 @@ def sanitize(raw: bytes) -> str:
     return raw.replace(b"\t", b"  ").decode("utf-8")
 
 
-def _mini_yaml(text: str) -> dict:
-    """Two-level YAML subset parser (mappings + scalars), enough for the
-    reference's config shape, used only when PyYAML is unavailable."""
-    root: dict = {}
-    stack: list[tuple[int, dict]] = [(0, root)]
-    for line in io.StringIO(text):
-        stripped = line.split("#", 1)[0].rstrip()
-        if not stripped.strip():
-            continue
-        indent = len(stripped) - len(stripped.lstrip())
-        key, _, value = stripped.strip().partition(":")
-        value = value.strip().strip('"').strip("'")
-        while stack and indent < stack[-1][0]:
-            stack.pop()
-        container = stack[-1][1]
-        if value == "":
-            child: dict = {}
-            container[key] = child
-            stack.append((indent + 2, child))
-        else:
-            if value.lstrip("-").isdigit():
-                container[key] = int(value)
-            elif value.lower() in ("true", "false"):
-                container[key] = value.lower() == "true"
-            else:
-                container[key] = value
-    return root
-
-
 def load_config(path: str) -> PumpConfig:
     with open(path, "rb") as f:
         text = sanitize(f.read())
-    data = yaml.safe_load(text) if _HAVE_YAML else _mini_yaml(text)
+    data = yaml.safe_load(text)
     ch = data.get("ClickHouse", {}) or {}
     cfg = PumpConfig(
         log_directory_map=data.get("LogDirectoryMap", {}) or {},

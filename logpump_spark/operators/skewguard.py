@@ -9,11 +9,11 @@ cannot apply (a window frame may not be split mid-key).
 Two guards live here; both are count-gated so a uniform corpus pays
 one cheap aggregate and nothing else:
 
-- ``first_n_per_key``: exact first-N-events-per-key prefix (the r10
-  two-stage rebuild that replaced the r8 single-window cap after the
-  k-sweep falsified its claimed bound — a lone ``row_number() <= N``
-  sorts the WHOLE hot partition before filtering anything).  Opt-in
-  from the callers because it CHANGES semantics.
+- ``first_n_per_key``: exact first-N-events-per-key prefix, in two
+  stages because a lone ``row_number() <= N`` sorts the WHOLE hot
+  partition before filtering anything (a k-sweep showed the
+  single-window cap missing its claimed bound).  Opt-in from the
+  callers because it CHANGES semantics.
 - ``over_threshold_keys``: the stage-0 detector alone, for operators
   (sessionize) that re-express the hot key exactly instead of capping
   it.
@@ -41,9 +41,9 @@ from .materialize import materialize as _mat
 _CAP_SHARDS = 32
 
 #: block count = BLOCK_OVERSUBSCRIPTION * cap_shards for the segmented
-#: window family (sessionize / segwin / seglead).  r11 shipped 4x to
-#: smooth balls-into-bins collisions when (key, block) hash-shuffles;
-#: the r12 interleaved k=64 sweep (SCALING.md §4.1) measured 8x
+#: window family (sessionize / segwin / seglead).  Oversubscription
+#: smooths balls-into-bins collisions when (key, block) hash-shuffles;
+#: an interleaved k=64 sweep (SCALING.md §4.1) measured 8x
 #: consistently ~25% faster (3.0-3.5 s vs 4.7-5.2 s hot wall at 256 vs
 #: 128 blocks on local[32]) — smaller per-task sorts beat the extra
 #: per-group overhead until ~512 blocks, after which group overhead
@@ -110,7 +110,7 @@ def first_n_per_key(
        Everyone else skips ranking entirely: a key with <= N rows has
        all of them in its first N.  The detector's result routes the
        plan at BUILD time (the same cardinality-bounded routing
-       pattern as the sessionize gate, r11):
+       pattern as the sessionize gate):
        - empty over-set (uniform corpus): the returned frame IS the
          input — the cap's only cost is the one detector aggregate;
        - over-set <= 1024 keys (every realistic bot/test-rig corpus):
@@ -134,7 +134,7 @@ def first_n_per_key(
        distribution) with the exact per-key window — single-task but
        bounded by the cap, not the corpus.
 
-    r15: when the cap binds, the result is MATERIALIZED once
+    When the cap binds, the result is MATERIALIZED once
     (localCheckpoint, the ranged_blocks precedent).  Callers like
     ``window_funnel`` reference the capped frame once per step, and
     un-materialized each reference re-ran the whole gate — detector

@@ -1,147 +1,192 @@
-"""True append-tailing streaming source (SURVEY.md §2.A S6) via the
-Python Data Source API (Spark 4).
+"""One byte-range record reader for 1C tech logs, bulk and live: the
+``techlog_tail`` Python data source (SURVEY.md §2.A S6, S7).
 
-The reference tails live log files from persisted byte offsets
-(hpcloud/tail with SeekInfo, internal/watcher/tail.go:15-35) and
-assembles multi-line records, flushing a buffered record when the next
-record-start line arrives (tail.go:57-114).  Spark's built-in file
-sources treat files as immutable, so the batch/streaming pipelines
-process rotated files whole; THIS source closes the remaining gap — sub-
-hour latency on the file 1C is still appending to.
+The reference tails each live log from a persisted byte offset and
+assembles multi-line records, flushing a record when the next
+record-start line arrives (internal/watcher/tail.go:15-35, 57-114).
+Here both reads plan ``ByteRange`` partitions that executors scan with
+``reader.assemble_records``:
 
-Semantics mirrored from the reference:
-- per-file byte offsets, resumed across micro-batches AND restarts (the
-  offset dict is the streaming offset, checkpointed by Spark — stronger
-  than the reference's 30 s JSON flush, watcher.go:129-142)
-- NUL scrub (tail.go:98-101)
-- record completes only when the next record-start line arrives; the
-  trailing partial record is NOT emitted — its start byte becomes the
-  committed offset, so it is re-read (idempotently) until completed.
-  ``emitTail=true`` flushes trailing records too (the 2 s idle-flush /
-  shutdown analog, tail.go:64, 90-92)
+- ``spark.read.format("techlog_tail")`` cuts every file into
+  ``chunkBytes`` ranges (default 64 MiB), so a multi-GB file becomes
+  many tasks instead of the wholetext reader's one string per file;
+- ``spark.readStream.format("techlog_tail")`` keeps one byte offset per
+  file in the streaming offset log.  ``latestOffset`` moves each file's
+  end to the start of its last record-start line, which holds back the
+  record that may still grow (``emitTail=true`` moves it to the end of
+  the file instead: the flush-at-shutdown analog, tail.go:64, 90-92).
+  ``partitions`` cuts the new bytes into the same ranges, so a replayed
+  micro-batch recomputes them from the logged offsets.
 
-Scale note: SimpleDataSourceStreamReader funnels rows through the driver
-— appropriate for the tail of the CURRENT hour (one file per active 1C
-process); the rotated-file bulk path stays on the distributed wholetext
-reader.  This split (tiny live tail via driver, bulk via executors) is
-the intended deployment shape.
+Options: ``path`` (required), ``glob`` (default ``*.log``), ``emitTail``
+and ``chunkBytes``.
+
+Ownership rule: a range [start, end) owns the records whose start line
+begins in [start, end).  Its scan seeks to ``start - 1`` and skips
+through the first LF, so a line that begins exactly at ``start`` is
+kept; the lines before its first record-start line continue the
+previous range's record and are skipped; its last record is read past
+``end`` up to the next record-start line.  The range that opens a span
+(byte 0, or a file's committed offset in a micro-batch) reads from its
+first byte and owns the lines before the first record-start line, as
+``records_from_text`` keeps a headless preamble.  No read passes the
+span's end, so bytes appended after planning never reach a batch.
+
+Offsets stay in bytes: an invalid UTF-8 byte is 1 byte on disk but a
+3-byte U+FFFD once decoded, so only record text is decoded.  Executors
+open files directly (local FS, NFS, fuse mounts).
 """
 
 from __future__ import annotations
 
 import fnmatch
-import io
 import os
 from collections.abc import Iterator
+from dataclasses import dataclass
+from typing import BinaryIO
 
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceStreamReader,
+    InputPartition,
+)
 from pyspark.sql.types import StructType
 
 from ..techlog.reader import assemble_records
 
 SCHEMA = "filename string, record string"
+CHUNK_BYTES = 64 * 1024 * 1024
 
 
-def _read(path: str, start: int, stop: int) -> bytes:
-    with open(path, "rb") as f:
+@dataclass(frozen=True)
+class ByteRange(InputPartition):
+    """The range [start, end) of a file's span [lo, hi)."""
+
+    path: str
+    lo: int
+    start: int
+    end: int
+    hi: int
+
+
+def _line_start(f: BinaryIO, start: int, lo: int) -> int:
+    """Seek ``f`` to its first line that begins at or after ``start``;
+    the span's first byte ``lo`` counts as a line start."""
+    if start == lo:
         f.seek(start)
-        return f.read(stop - start)
+        return start
+    f.seek(start - 1)
+    return start - 1 + len(f.readline())
 
 
-def _all_records(chunk: bytes) -> list[str]:
-    """Every record of a RAW BYTE chunk, the open last one included."""
-    return [rec.text for rec in assemble_records(io.BytesIO(chunk))]
+def _lines(f: BinaryIO, pos: int, hi: int) -> Iterator[bytes]:
+    """The lines of ``f`` from its position ``pos``, cut at byte ``hi``."""
+    while pos < hi and (line := f.readline(hi - pos)):
+        pos += len(line)
+        yield line
 
 
-def _complete_records(chunk: bytes) -> tuple[list[str], int]:
-    """Assemble records from a RAW BYTE chunk.
-
-    Returns (complete_records, bytes_consumed) where bytes_consumed stops
-    at the start of the last (possibly incomplete) record — the tail.go
-    buffer that waits for the next record-start line.
-
-    Record assembly and offset accounting both stay in the BYTES domain:
-    decoding happens only on the emitted record text.  (Decoding first
-    would desync offsets — an invalid UTF-8 byte is 1 byte on disk but
-    re-encodes as a 3-byte U+FFFD — and a committed offset must land on a
-    real file position.)  Offsets always land on line starts, which are
-    byte-exact regardless of encoding errors inside lines."""
-    records = list(assemble_records(io.BytesIO(chunk)))
-    if not records:
-        return [], 0
-    return [rec.text for rec in records[:-1]], records[-1].start
+def _scan(r: ByteRange) -> Iterator[tuple[str, str]]:
+    """(filename, record) for every record that ``r`` owns."""
+    name = os.path.basename(r.path)
+    with open(r.path, "rb") as f:
+        pos = _line_start(f, r.start, r.lo)
+        for rec in assemble_records(_lines(f, pos, r.hi), pos):
+            if rec.start >= r.end:
+                break
+            if rec.headed or r.start == r.lo:
+                yield name, rec.text
+            if rec.stop >= r.end:
+                break
 
 
-class TechlogTailReader(SimpleDataSourceStreamReader):
+def _open_start(path: str, lo: int, hi: int) -> int:
+    """Start of the last record-start line in [lo, hi), or ``lo``.
+
+    Reads back from ``hi`` in growing windows, so a drain reads the open
+    record rather than the whole file."""
+    with open(path, "rb") as f:
+        step = 1 << 16
+        while True:
+            a = max(lo, hi - step)
+            pos = _line_start(f, a, lo)
+            recs = assemble_records(_lines(f, pos, hi), pos)
+            starts = [rec.start for rec in recs if rec.headed]
+            if starts or a == lo:
+                return starts[-1] if starts else lo
+            step *= 4
+
+
+class _Reader:
+    """The file walk and range cutter shared by the bulk and tail reads."""
+
     def __init__(self, options: dict):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("techlog_tail requires option 'path'")
         self.glob = options.get("glob", "*.log")
-        self.emit_tail = str(options.get("emittail", "false")).lower() == "true"
+        self.emit_tail = str(options.get("emitTail", "false")).lower() == "true"
+        self.chunk = int(options.get("chunkBytes", CHUNK_BYTES))
+        if self.chunk <= 0:
+            raise ValueError("techlog_tail option 'chunkBytes' must be positive")
+
+    def _sizes(self) -> dict[str, int]:
+        """Size of every file under ``path`` whose name matches ``glob``
+        (the reference's recursive FilePattern walk, scan.go:115-142)."""
+        sizes = {}
+        for root, _dirs, names in os.walk(self.path):
+            for n in fnmatch.filter(names, self.glob):
+                p = os.path.join(root, n)
+                try:
+                    sizes[p] = os.path.getsize(p)
+                except FileNotFoundError:  # removed since the walk listed it
+                    pass
+        return sizes
+
+    def _cut(self, starts: dict, ends: dict) -> list[ByteRange]:
+        """``chunk``-byte ranges of each file's span [starts, ends)."""
+        out = []
+        for path, hi in sorted(ends.items()):
+            lo = int(starts.get(path, 0))
+            out += [
+                ByteRange(path, lo, a, min(a + self.chunk, hi), hi)
+                for a in range(lo, hi, self.chunk)
+            ]
+        return out
+
+    def read(self, partition: ByteRange | None) -> Iterator[tuple[str, str]]:
+        # a batch read with no ranges still runs one task, on None
+        return _scan(partition) if partition else iter(())
+
+
+class _BulkReader(_Reader, DataSourceReader):
+    def partitions(self) -> list[ByteRange]:
+        return self._cut({}, self._sizes())
+
+
+class _TailReader(_Reader, DataSourceStreamReader):
+    def __init__(self, options: dict):
+        super().__init__(options)
+        self.ends: dict[str, int] = {}  # what latestOffset last returned
 
     def initialOffset(self) -> dict:
         return {"offsets": {}}
 
-    def _files(self) -> list[str]:
-        out = []
-        for root, _dirs, names in os.walk(self.path):
-            for n in names:
-                if fnmatch.fnmatch(n, self.glob):
-                    out.append(os.path.join(root, n))
-        return sorted(out)  # mtime-sort analog (scan.go:143-153): stable order
+    def latestOffset(self) -> dict:
+        for path, hi in self._sizes().items():
+            lo = self.ends.get(path, 0)
+            if hi > lo:
+                self.ends[path] = hi if self.emit_tail else _open_start(path, lo, hi)
+        return {"offsets": dict(self.ends)}
 
-    def _read_new(self, offsets: dict) -> tuple[list[tuple], dict]:
-        rows: list[tuple] = []
-        new_offsets = dict(offsets)
-        for path in self._files():
-            try:
-                size = os.path.getsize(path)
-            except OSError:
-                continue
-            start = int(offsets.get(path, 0))
-            if size <= start:
-                continue
-            raw = _read(path, start, size)
-            if self.emit_tail:
-                records = _all_records(raw)
-                new_offsets[path] = size
-            else:
-                # commit only up to the last COMPLETE record; the open one
-                # is re-read next batch (idempotent partial-record seek).
-                # consumed is already a byte offset — no re-encoding.
-                records, consumed = _complete_records(raw)
-                new_offsets[path] = start + consumed
-            base = os.path.basename(path)
-            rows.extend((base, r) for r in records)
-        return rows, {"offsets": new_offsets}
-
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        rows, end = self._read_new(start.get("offsets", {}))
-        return iter(rows), end
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        # replay after failure: re-read the byte ranges [start, end) per
-        # file; a committed range ends at a record boundary (or at the end
-        # of the file under emitTail), so its last record is complete
-        rows: list[tuple] = []
-        s_off = start.get("offsets", {})
-        e_off = end.get("offsets", {})
-        for path, e in e_off.items():
-            s = int(s_off.get(path, 0))
-            e = int(e)
-            if e <= s or not os.path.exists(path):
-                continue
-            base = os.path.basename(path)
-            rows.extend((base, r) for r in _all_records(_read(path, s, e)))
-        return iter(rows)
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the Spark checkpoint; nothing external
+    def partitions(self, start: dict, end: dict) -> list[ByteRange]:
+        return self._cut(start["offsets"], end["offsets"])
 
 
 class TechlogTailDataSource(DataSource):
-    """spark.readStream.format("techlog_tail").option("path", dir).load()"""
+    """spark.read / spark.readStream .format("techlog_tail")
+    .option("path", dir).load() -> DataFrame[filename, record]"""
 
     @classmethod
     def name(cls) -> str:
@@ -150,8 +195,11 @@ class TechlogTailDataSource(DataSource):
     def schema(self) -> str:
         return SCHEMA
 
-    def simpleStreamReader(self, schema: StructType) -> TechlogTailReader:
-        return TechlogTailReader(self.options)
+    def reader(self, schema: StructType) -> _BulkReader:
+        return _BulkReader(self.options)
+
+    def streamReader(self, schema: StructType) -> _TailReader:
+        return _TailReader(self.options)
 
 
 def register(spark) -> None:

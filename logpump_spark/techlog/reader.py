@@ -15,6 +15,8 @@ executors.  Parallelism = one task per file; an hourly 1C log is at most a
 few hundred MB, well within executor memory.  The streaming job
 (streaming/job.py) builds on Spark's file source, which reads each path
 once: lines appended to a file after it was read are not picked up.
+The ``techlog_tail`` source (sources/tail_source.py) reads byte ranges
+instead, for huge files and live tails, through ``assemble_records``.
 """
 
 from __future__ import annotations

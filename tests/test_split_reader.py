@@ -1,14 +1,19 @@
-"""Split-aware reader == wholetext reader, under adversarial chunk sizes
-that cut mid-record, mid-line, and exactly on boundaries."""
+"""The techlog_tail bulk read == the wholetext reader, under adversarial
+chunk sizes that cut mid-record, mid-line, and exactly on boundaries."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import CaseInsensitiveDict
 
-from logpump_spark.sources.tail_source import _complete_records
+from logpump_spark.sources.tail_source import (
+    ByteRange,
+    TechlogTailDataSource,
+    _scan,
+    register,
+)
 from logpump_spark.techlog import parse_records, read_techlog, records_from_text
-from logpump_spark.techlog.split_reader import _scan_range, read_techlog_split
 
 RECORDS = [
     "07:15.123456-2500,DBMSSQL,0,Usr=ivanov,Sql='SELECT * FROM T WHERE x=\\'y\\''",
@@ -30,6 +35,16 @@ def logdir(tmp_path_factory):
     return str(d)
 
 
+def read_split(spark, path, chunk):
+    register(spark)
+    return (
+        spark.read.format("techlog_tail")
+        .option("path", path)
+        .option("chunkBytes", str(chunk))
+        .load()
+    )
+
+
 def _wholetext_records(spark, logdir):
     recs = records_from_text(read_techlog(spark, logdir))
     return sorted(map(tuple, recs.select("filename", "record").collect()))
@@ -38,27 +53,40 @@ def _wholetext_records(spark, logdir):
 @pytest.mark.parametrize("chunk", [7, 33, 64, 100, 517, 1 << 20])
 def test_split_reader_equals_wholetext(spark, logdir, chunk):
     want = _wholetext_records(spark, logdir)
-    got = sorted(
-        map(tuple, read_techlog_split(spark, logdir, chunk_bytes=chunk).collect())
-    )
+    got = sorted(map(tuple, read_split(spark, logdir, chunk).collect()))
     assert got == want, f"chunk={chunk}"
 
 
+def test_every_small_chunk_equals_wholetext(spark, logdir):
+    # every cut position, read in-process: the same ranges and scan as
+    # the Spark read, without a task per range
+    want = _wholetext_records(spark, logdir)
+    for chunk in range(1, 130):
+        bulk = TechlogTailDataSource(
+            CaseInsensitiveDict(path=logdir, chunkBytes=str(chunk))
+        ).reader(None)
+        got = sorted(row for part in bulk.partitions() for row in bulk.read(part))
+        assert got == want, f"chunk={chunk}"
+
+
 def test_scan_range_boundary_on_line_start(tmp_path):
-    # boundary exactly at a record-start line: owned by the crossing range
+    # a range owns the records whose start line begins in [start, end):
+    # a cut exactly at a record-start line gives that line to the range
+    # that starts there, and the range before it ends at the cut
     p = str(tmp_path / "b.log")
     content = RECORDS[2] + "\n" + RECORDS[4] + "\n"
     with open(p, "w", encoding="utf-8") as f:
         f.write(content)
     cut = len((RECORDS[2] + "\n").encode())
-    first = list(_scan_range(p, 0, cut))
-    second = list(_scan_range(p, cut, len(content.encode())))
-    assert first == [RECORDS[2], RECORDS[4]]  # crossing range owns the cut line
-    assert second == []
+    size = len(content.encode())
+    first = [rec for _f, rec in _scan(ByteRange(p, 0, 0, cut, size))]
+    second = [rec for _f, rec in _scan(ByteRange(p, 0, cut, size, size))]
+    assert first == [RECORDS[2]]
+    assert second == [RECORDS[4]]  # the range starting at the cut owns it
 
 
 def test_split_parse_composition(spark, logdir):
-    entries = parse_records(read_techlog_split(spark, logdir, chunk_bytes=50))
+    entries = parse_records(read_split(spark, logdir, 50))
     rows = entries.filter(F.col("Timestamp") == "25052607.log").collect()
     sqls = sorted(r.SQL for r in rows if r.Component == "DBMSSQL")
     assert sqls[0] == "SELECT * FROM T WHERE x='y'"
@@ -68,18 +96,24 @@ def test_split_parse_composition(spark, logdir):
 
 
 def _assert_all_paths_agree(spark, d, records, chunk):
-    # wholetext, the split reader and the tail source all give `records`
+    # wholetext, the bulk read and the tail stream all give `records`
     d.mkdir()
     data = ("\n".join(records) + "\n").encode("utf-8")
     (d / "25052607.log").write_bytes(data)
     want = [("25052607.log", r) for r in records]
 
     assert _wholetext_records(spark, str(d)) == want
-    got = read_techlog_split(spark, str(d), chunk_bytes=chunk).collect()
+    got = read_split(spark, str(d), chunk).collect()
     assert sorted(map(tuple, got)) == want, f"chunk={chunk}"
-    # the tail source completes a record when the next one starts
-    done, consumed = _complete_records(data + b"59:59.999999-1,END,0\n")
-    assert done == records and consumed == len(data)
+    # the tail completes a record when the next one starts
+    (d / "25052607.log").write_bytes(data + b"59:59.999999-1,END,0\n")
+    tail = TechlogTailDataSource(
+        CaseInsensitiveDict(path=str(d), chunkBytes=str(chunk))
+    ).streamReader(None)
+    end = tail.latestOffset()
+    assert end["offsets"][str(d / "25052607.log")] == len(data)
+    parts = tail.partitions({"offsets": {}}, end)
+    assert [row for part in parts for row in tail.read(part)] == want
 
 
 @pytest.mark.parametrize("chunk", [7, 33, 64, 1 << 20])
