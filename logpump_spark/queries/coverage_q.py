@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..tables import load
+from ..tables import SCHEMA, load
 from ..techlog.parser import parse_int32, parse_uint, split_record, _U32_MAX
 
 _N = 1500
@@ -19,9 +19,12 @@ _N = 1500
 def scan_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1: glob-filtered recursive scan (scan.go:115-142 glob->regex).
     pathGlobFilter 'l*.parquet' must select exactly the lineitem file;
-    input_file_name() proves which files the scan touched."""
+    input_file_name() proves which files the scan touched.  The glob
+    selects only lineitem, so its pinned schema spares the inference
+    job."""
     df = (
         spark.read.format("parquet")
+        .schema(SCHEMA["lineitem"])
         .option("pathGlobFilter", "l*.parquet")
         .option("recursiveFileLookup", "true")
         .load(sf_dir)

@@ -5,6 +5,11 @@ runs unchanged on a multi-executor cluster: AQE handles runtime re-planning
 (skew joins, partition coalescing), shuffle partitions default to the local
 core count but should be ~2-3x total cluster cores at 100 TB, and Arrow is
 on for the few Pandas-UDF paths (multimodal decode, stateful streaming).
+
+Plan construction makes no py4j round trips it can avoid, so the session
+turns off PySpark's per-call Python call-site capture; the trade-off is
+noted at the conf.  PySpark reads that conf once per process, from the
+first active session.
 """
 
 from __future__ import annotations
@@ -43,17 +48,18 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # r15: allow shuffled hash join where its size conditions hold
-        # (the optimization guide's baseline): both sides still shuffle,
-        # but neither is SORTED — measured 0.79x over the 19 join-heavy
-        # registry ids at sf0.1 (13.1 -> 10.3 s, every fact-fact TPC-H
-        # shape 0.54-0.85x, none worse than 1.10x), and the win is
-        # scale-independent (the sort it removes grows n log n).  The
-        # planner only picks SHJ when a build side fits per-partition
-        # memory (plus AQE's runtime rewrite), so the OOM risk the
-        # default guards against stays bounded; sort-merge remains for
-        # large-per-partition builds.
+        # Shuffled hash join where its size conditions hold: both sides
+        # still shuffle, but neither is sorted.  Measured 0.79x over the
+        # 19 join-heavy registry ids at sf0.1 (13.1 -> 10.3 s), and the
+        # sort it removes grows n log n.  The planner picks it only when a
+        # build side fits per-partition memory, so sort-merge stays for
+        # large builds.
         .config("spark.sql.join.preferSortMergeJoin", "false")
+        # No Python call-site capture per Column/DataFrame call (about five
+        # py4j round trips each while building a plan).  Analysis errors
+        # keep their message and JVM stack; only the Python file:line
+        # "DataFrame context" is lost.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -4,24 +4,53 @@ Parquet scans here are the scale-critical path: Catalyst pushes filters and
 prunes columns into these scans (verify with .explain showing PushedFilters
 / ReadSchema), so query functions should select/filter on the DataFrames
 returned here rather than materializing anything.
+
+Every table is read with the pinned schema below (FIXTURES.md section 1),
+so ``load`` starts no Spark job: given a schema, Spark skips its
+footer-reading inference job.  The schemas equal what Spark infers from
+the files except ``events.ts``.  The files store it as a zone-less
+TIMESTAMP(MICROS), inferred as ``timestamp_ntz``; it is pinned as the
+session-tz ``timestamp`` that ``unix_micros`` / ``window`` need, and Spark
+reads the stored micros into it unchanged, which under the UTC session
+every entry point pins equals casting the inferred column.
+tests/test_schema_canary.py names the table whose files drift from these
+schemas (a TIMESTAMP(NANOS) events file, for one, reads under neither).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+SCHEMA = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": (
+        "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+        "c_mktsegment string"
+    ),
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part": (
+        "p_partkey bigint, p_name string, p_brand string, p_type string, "
+        "p_size int, p_retailprice double"
+    ),
+    "orders": (
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+        "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string"
+    ),
+    "lineitem": (
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+        "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz"
+    ),
+    "events": (
+        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+        "value double, props string"
+    ),
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+
+TABLE_NAMES = tuple(SCHEMA)
 
 # Dimension tables small enough to broadcast at ANY scale factor (TPC-H dims
 # grow slowly or not at all); fact tables shuffle on their join keys.
@@ -29,29 +58,6 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLE_NAMES:
+    if name not in SCHEMA:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS).  Spark 3.x's vectorized
-        # reader rejects it outright — read as raw nanos (runtime-settable
-        # legacy conf) and truncate to µs, the same truncation DuckDB
-        # applies when it narrows ns -> its µs TIMESTAMP, so oracles agree
-        # exactly.  Spark 4.1+ reads NANOS natively as TIMESTAMP_NTZ —
-        # normalize to session-tz TIMESTAMP (value-preserving under the
-        # UTC session tz every entry point pins) so downstream
-        # unix_micros()/window() calls resolve on either Spark.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
-        dtype = dict(df.dtypes).get("ts")
-        from pyspark.sql import functions as F
-
-        if dtype == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        elif dtype == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
+    return spark.read.schema(SCHEMA[name]).parquet(f"{sf_dir}/{name}.parquet")

@@ -1,62 +1,60 @@
-"""Engine-upgrade canary: `tables.load()` must present EXACTLY these
-schemas whatever Spark/parquet version is underneath.
+"""Engine-upgrade canary: the schemas `tables.load()` pins must be the
+schemas the parquet files actually carry.
 
-Round 3 regressed 15 query ids because Spark 4.1 started reading the
-events TIMESTAMP(NANOS) column natively as TIMESTAMP_NTZ and the
-normalization branch silently stopped firing — every `unix_micros(ts)`
-then failed analysis at driver time.  This test turns that class of
-silent upgrade break into one loud, named failure pointing at
-logpump_spark/tables.py."""
+`load` reads every table with a fixed schema instead of inferring one, so
+a check of `load().schema` alone would only restate the pinned list.  The
+rule these tests hold instead: for every table at every scale factor
+present, the pinned schema equals what `spark.read.parquet` infers from
+the files, except `events.ts`, which the files store without a time zone
+(`timestamp_ntz`) and `load` presents as the session-tz `timestamp` every
+`unix_micros(ts)` / `window(ts)` call needs.  A Spark or parquet upgrade
+that changes a type mapping, or a fixture that changes a column, fails
+here by name instead of at execution time inside some query."""
 
 from __future__ import annotations
 
-import pytest
+import glob
+import os
 
-from logpump_spark.tables import load
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
+
+from logpump_spark.tables import TABLE_NAMES, load
 
 from .conftest import SF_SMALL
 
-_EXPECTED = {
-    "events": {
-        "event_id": "bigint",
-        "ts": "timestamp",  # NEVER timestamp_ntz / bigint — see tables.load()
-        "user_id": "bigint",
-        "event_type": "string",
-        "value": "double",
-        "props": "string",
-    },
-    "documents": {
-        "doc_id": "bigint",
-        "text": "string",
-        "lang": "string",
-        "source": "string",
-        "n_chars": "bigint",
-    },
-    "embeddings": {
-        "vec_id": "bigint",
-        "embedding": "array<float>",
-        "label": "int",
-    },
-    "lineitem": None,  # presence + load-ability only
-    "orders": None,
-    "customer": None,
-    "supplier": None,
-    "part": None,
-    "nation": None,
-    "region": None,
-}
+# every scale factor the fixture directory holds (sf0.001, sf0.01, sf0.1)
+SF_DIRS = sorted(glob.glob(os.path.join(os.path.dirname(SF_SMALL), "sf*")))
 
 
-@pytest.mark.parametrize("table", sorted(_EXPECTED))
+def _expected(spark, sf_dir: str, table: str):
+    """The inferred schema, with `events.ts` as session-tz timestamp."""
+    inferred = spark.read.parquet(f"{sf_dir}/{table}.parquet").schema
+    if table == "events":
+        assert inferred["ts"].dataType.simpleString() == "timestamp_ntz", inferred
+        inferred["ts"].dataType = TimestampType()
+    return inferred
+
+
+@pytest.mark.parametrize("table", sorted(TABLE_NAMES))
 def test_table_schema_stable_across_engine_upgrades(spark, table):
-    df = load(spark, SF_SMALL, table)
-    got = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    want = _EXPECTED[table]
-    if want is None:
-        assert len(got) > 0
-        return
-    assert got == want, (
-        f"{table} schema drifted (likely a Spark/parquet upgrade changed "
-        f"a type mapping): {got} != {want}; fix the normalization in "
-        "logpump_spark/tables.py:load, NOT the queries"
+    assert SF_DIRS, "no scale-factor directory found"
+    for sf_dir in SF_DIRS:
+        got = load(spark, sf_dir, table).schema
+        want = _expected(spark, sf_dir, table)
+        assert got == want, (
+            f"{sf_dir}/{table}: pinned schema {got.simpleString()} != files "
+            f"{want.simpleString()}; fix SCHEMA in logpump_spark/tables.py, "
+            "NOT the queries"
+        )
+
+
+def test_pinned_events_rows_equal_inferred_read(spark):
+    pinned = load(spark, SF_SMALL, "events")
+    inferred = spark.read.parquet(f"{SF_SMALL}/events.parquet").withColumn(
+        "ts", F.col("ts").cast("timestamp")
     )
+    assert pinned.count() == inferred.count() > 0
+    assert pinned.exceptAll(inferred).count() == 0
+    assert inferred.exceptAll(pinned).count() == 0
