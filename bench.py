@@ -331,6 +331,11 @@ def main() -> None:
     # projection is huge; untamed, its first execution pays a 5-20x
     # compile-storm penalty that has nothing to do with the engine).
     # The timed run below then measures steady-state throughput at sf_dir.
+    # It relies on the codegen class cache holding every class of every
+    # id (spark.sql.codegen.cache.maxEntries, set in session.get_spark):
+    # all ids warm before the first is timed, so about 2,600 classes
+    # separate an id's warm-up from its timed run, and a smaller cache
+    # evicts the warmed class and the timed run compiles it again.
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir) and os.path.abspath(warm_dir) != os.path.abspath(sf_dir):
         for name in names:

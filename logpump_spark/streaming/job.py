@@ -44,6 +44,16 @@ def table_routing_column(
     return F.coalesce(F.try_element_at(routing, comp), F.lit(default_table))
 
 
+def epoch_literal(epoch_id: int) -> Column:
+    """The ``_epoch`` partition value as a STRING literal.  Whole-stage
+    codegen inlines a numeric literal into the generated source, so an
+    int epoch would make every micro-batch compile its own classes; a
+    string literal is passed to the generated code by reference, so one
+    class serves every epoch.  The partition directory is the same
+    ``_epoch=<n>`` either way, and a read infers the column as int."""
+    return F.lit(str(int(epoch_id)))
+
+
 def route_and_write(
     rows: DataFrame,
     base_path: str,
@@ -65,7 +75,7 @@ def route_and_write(
     part_cols = ["_table", "EventDate", "_epoch"]
     routed = rows.withColumn(
         "_table", table_routing_column(table_map, default_table)
-    ).withColumn("_epoch", F.lit(int(epoch_id)))
+    ).withColumn("_epoch", epoch_literal(epoch_id))
     (
         # sortWithinPartitions = the MergeTree ORDER BY (EventDate,
         # EventTime) clustering (README.md:131): rows land time-ordered
@@ -86,7 +96,7 @@ def write_rejects(rejects: DataFrame, sink_dir: str, epoch_id: int) -> None:
     dynamic overwrite, mirroring route_and_write (a replayed micro-batch
     rewrites its own ``_epoch`` partition instead of duplicating)."""
     (
-        rejects.withColumn("_epoch", F.lit(int(epoch_id)))
+        rejects.withColumn("_epoch", epoch_literal(epoch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("_epoch")
@@ -312,7 +322,10 @@ def build_techlog_stream(
     files = _one(dirs[0])
     for d in dirs[1:]:
         files = files.unionByName(_one(d))
-    entries = parse_records(records_from_text(files))
+    # InsertedAt (current_timestamp) would be folded into the batch's
+    # generated code as a literal, so every micro-batch would compile its
+    # parse classes anew; no sink reads it (TECHLOG_COLUMNS, rejects)
+    entries = parse_records(records_from_text(files)).drop("InsertedAt")
     routing = {"mtime": None, "tmap": table_map or {}, "default": default_table}
 
     def _maybe_reload() -> None:

@@ -245,8 +245,11 @@ def parse_records(
     and avoids the parse-plane C2 compile storm (BASELINE.md).  Fused is
     one projection with no exchange.  ``None`` picks split for a batch
     ``df`` and fused for a streaming one: a long-lived pump pays the
-    storm once per process, but the exchange on every micro-batch
-    (SCALING.md §10.3-10.4).
+    exchange on every micro-batch, but the storm only when a class is
+    compiled (SCALING.md §10.3-10.4).  That is once per process only
+    if no per-batch value reaches the generated code: InsertedAt's
+    timestamp is folded in as a literal, so the pump drops it before
+    the sink (``build_techlog_stream``; tests/test_codegen_reuse.py).
     """
     rec = F.col(record_col)
     header_part, sql_text, context_text = split_record(rec)
