@@ -145,13 +145,16 @@ def _full_entry(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame:
         # work out to every core; at cluster scale the same holds when a
         # record-assembly stage emits few/skewed partitions.
         #
-        # The SECOND round-robin exchange splits record synthesis and the
-        # parse into separate codegen stages: fused, they form one
-        # enormous generated method whose C2 compile runs for tens of
-        # seconds while every executor thread executes it interpreted
-        # (cold runs measured 5-20x steady state); two half-size methods
-        # compile promptly.  The shuffled synthetic records are ~50 MB at
-        # sf0.1 — sub-second — against a worst-case minute of JIT stall.
+        # The SECOND round-robin exchange keeps record synthesis out of
+        # the parse's first codegen stage.  It was added when the parse
+        # was one inline 24-column projection: fused with synthesis it
+        # formed one enormous generated method whose C2 compile ran for
+        # tens of seconds while every executor thread executed it
+        # interpreted (SCALING.md §10.3).  The parse is now a stack of
+        # small projections (parse_records; SCALING.md §7), so that
+        # method no longer exists; whether the exchange still pays has
+        # not been re-measured.  The shuffled synthetic records are
+        # ~50 MB at sf0.1, sub-second to move.
         par = spark.sparkContext.defaultParallelism
         df = (
             ev.repartition(par)

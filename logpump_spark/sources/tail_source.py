@@ -14,7 +14,9 @@ Here both reads plan ``ByteRange`` partitions that executors scan with
   file in the streaming offset log.  ``latestOffset`` moves each file's
   end to the start of its last record-start line, which holds back the
   record that may still grow (``emitTail=true`` moves it to the end of
-  the file instead: the flush-at-shutdown analog, tail.go:64, 90-92).
+  the file's last complete line instead, the flush-at-shutdown analog,
+  tail.go:64, 90-92: the open record is flushed, a half-written line is
+  not).
   ``partitions`` cuts the new bytes into the same ranges, so a replayed
   micro-batch recomputes them from the logged offsets.
 
@@ -118,6 +120,21 @@ def _open_start(path: str, lo: int, hi: int) -> int:
             step *= 4
 
 
+def _line_end(path: str, lo: int, hi: int) -> int:
+    """Just past the last LF in [lo, hi), or ``lo``: the end of the last
+    complete line, so a line the writer is still on stays held back."""
+    with open(path, "rb") as f:
+        b = hi
+        while b > lo:
+            a = max(lo, b - (1 << 16))
+            f.seek(a)
+            nl = f.read(b - a).rfind(b"\n")
+            if nl >= 0:
+                return a + nl + 1
+            b = a
+    return lo
+
+
 class _Reader:
     """The file walk and range cutter shared by the bulk and tail reads."""
 
@@ -177,7 +194,7 @@ class _TailReader(_Reader, DataSourceStreamReader):
         for path, hi in self._sizes().items():
             lo = self.ends.get(path, 0)
             if hi > lo:
-                self.ends[path] = hi if self.emit_tail else _open_start(path, lo, hi)
+                self.ends[path] = (_line_end if self.emit_tail else _open_start)(path, lo, hi)
         return {"offsets": dict(self.ends)}
 
     def partitions(self, start: dict, end: dict) -> list[ByteRange]:

@@ -87,81 +87,114 @@ def _unescape(s: Column) -> Column:
     return F.regexp_replace(s, r"\\(.)", "$1")
 
 
-def split_record(rec: Column) -> tuple[Column, Column, Column]:
-    """-> (header_part, sql_text, context_text), per ParseLogRecord
-    (parser.go:50-66)."""
-    sql_idx = F.instr(rec, "Sql=")  # first occurrence, 1-based, 0 if absent
+# The parse steps.  Each takes its inputs as Columns, so the same step
+# builds the inline helpers below (every input a full expression) and the
+# stacked projections of parse_records (every input a column of the
+# previous projection).
+
+
+def _locate(rec: Column) -> tuple[Column, Column, Column, Column]:
+    """-> (sql_idx, header_part, quote, rest) of ``rec``: the split at the
+    first ``Sql=`` (parser.go:50-66).  ``sql_idx`` is
+    1-based, 0 if absent; ``quote`` is the char right after the marker
+    ('' at the end of the record) and ``rest`` what follows it."""
+    sql_idx = F.instr(rec, "Sql=")
     has_sql = sql_idx > 0
     header_part = F.when(has_sql, rec.substr(F.lit(1), sql_idx - 1)).otherwise(rec)
-
-    quote = rec.substr(sql_idx + F.lit(4), F.lit(1))  # '' when at end of record
+    quote = rec.substr(sql_idx + F.lit(4), F.lit(1))
     rest = rec.substr(sql_idx + F.lit(5), F.length(rec))
+    return sql_idx, header_part, quote, rest
 
-    # Escape-aware scan to the closing quote.  The quote delimiter is
-    # whatever char follows 'Sql=' (almost always '); supported explicitly
-    # for ' and ", anything else falls back to "no closing quote" = rest.
-    def _sql_and_after(q: str) -> tuple[Column, Column]:
+
+_QUOTES = ("'", '"')  # the quote delimiters the SQL scan supports
+
+
+def _sql_scan(rest: Column) -> dict[str, tuple[Column, Column]]:
+    """Escape-aware scan of ``rest`` to the closing quote, per supported
+    quote delimiter: ``{q: (closed, raw)}``, ``raw`` the SQL body before
+    the first unescaped ``q``.  Any other delimiter falls back to "no
+    closing quote" (``_sql_pick``)."""
+    out = {}
+    for q in _QUOTES:
         qe = "\\" + q
         # "unrolled loop" form [^q\]*(?:\.[^q\]*)* instead of the per-char
         # alternation (?:[^q\]|\.)* — same language, linear-time on Java's
         # backtracking regex engine instead of alternation-per-character
         body = r"[^" + qe + r"\\]*(?:\\.[^" + qe + r"\\]*)*"
         pat = r"(?s)^(" + body + r")" + qe
-        # the match is ^-anchored, so the remainder after the closing
-        # quote is POSITIONAL: rest = raw + quote + after.  Deriving it
-        # by substr instead of a second capture halves the regex runs
-        # per record (this scan is the ingest hot path).
-        raw = F.regexp_extract(rest, pat, 1)
-        after = rest.substr(F.length(raw) + F.lit(2), F.length(rest))
-        closed = rest.rlike(pat)
-        return (
-            F.when(closed, raw).otherwise(rest),
-            F.when(closed, after).otherwise(F.lit("")),
-        )
+        out[q] = (rest.rlike(pat), F.regexp_extract(rest, pat, 1))
+    return out
 
-    sq_sql, sq_after = _sql_and_after("'")
-    dq_sql, dq_after = _sql_and_after('"')
-    raw_sql = (
-        F.when(quote == "'", sq_sql).when(quote == '"', dq_sql).otherwise(rest)
+
+def _sql_pick(quote: Column, rest: Column, scan: dict[str, tuple[Column, Column]]) -> tuple[Column, Column]:
+    """-> (raw_sql, after_sql): the scan of the record's own delimiter.
+    The match is ^-anchored, so the remainder after the closing quote is
+    POSITIONAL: rest = raw + quote + after.  Deriving it by substr instead
+    of a second capture halves the regex runs per record.  Unterminated
+    quote: the whole tail is SQL and nothing follows
+    (sql_extractor.go:40-44)."""
+
+    def pick(f, default: Column) -> Column:
+        out = F
+        for q, (closed, raw) in scan.items():
+            out = out.when(quote == q, f(closed, raw))
+        return out.otherwise(default)
+
+    raw_sql = pick(lambda closed, raw: F.when(closed, raw).otherwise(rest), rest)
+    after_sql = pick(
+        lambda closed, raw: F.when(
+            closed, rest.substr(F.length(raw) + F.lit(2), F.length(rest))
+        ).otherwise(F.lit("")),
+        F.lit(""),
     )
-    after_sql = (
-        F.when(quote == "'", sq_after).when(quote == '"', dq_after).otherwise(F.lit(""))
-    )
+    return raw_sql, after_sql
 
-    sql_text = F.when(has_sql & (F.length(rec) >= sql_idx + 4), _scrub_sql(_unescape(raw_sql))).otherwise(F.lit(""))
 
-    # Context comes from the remainder after SQL, or the whole record when
-    # there is no Sql= marker (parser.go:53-54, :65)
-    ctx_source = F.when(has_sql, after_sql).otherwise(rec)
+def _sql_text(n: Column, sql_idx: Column, raw_sql: Column) -> Column:
+    """Unescaped, scrubbed SQL; '' without a marker or when the record
+    ends at it."""
+    return F.when(
+        (sql_idx > 0) & (n >= sql_idx + 4), _scrub_sql(_unescape(raw_sql))
+    ).otherwise(F.lit(""))
+
+
+def _context_source(rec: Column, sql_idx: Column, after_sql: Column) -> Column:
+    """Context comes from the remainder after SQL, or the whole record
+    when there is no Sql= marker (parser.go:53-54, :65)."""
+    return F.when(sql_idx > 0, after_sql).otherwise(rec)
+
+
+def _context_tail(ctx_source: Column) -> tuple[Column, Column]:
+    """-> (ctx_idx, ctx_tail): the first ``,Context='`` (1-based, 0 if
+    absent) and what follows it."""
     ctx_idx = F.instr(ctx_source, ",Context='")
-    ctx_tail = ctx_source.substr(ctx_idx + F.lit(10), F.length(ctx_source))
-    # to the LAST quote (context_extractor.go:12); none -> whole tail.
-    # last-quote position via reverse+instr — one linear pass instead of
-    # the greedy (?s)^(.*)' regex (full scan + backtrack per record)
+    return ctx_idx, ctx_source.substr(ctx_idx + F.lit(10), F.length(ctx_source))
+
+
+def _context_text(n: Column, sql_idx: Column, ctx_idx: Column, ctx_tail: Column) -> Column:
+    """The tail up to its LAST quote (context_extractor.go:12); none ->
+    whole tail.  Last-quote position via reverse+instr — one linear pass
+    instead of the greedy (?s)^(.*)' regex."""
     last_q = F.length(ctx_tail) - F.instr(F.reverse(ctx_tail), "'") + 1
     ctx = F.when(
         ctx_tail.contains("'"), ctx_tail.substr(F.lit(1), last_q - 1)
     ).otherwise(ctx_tail)
     context_text = F.when(ctx_idx > 0, ctx).otherwise(F.lit(""))
-    # no-Sql= + empty-after-marker edge: Sql= at very end of record
-    context_text = F.when(
-        has_sql & (F.length(rec) < sql_idx + 4), F.lit("")
-    ).otherwise(context_text)
-
-    return header_part, sql_text, context_text
+    # Sql= at the very end of the record
+    return F.when((sql_idx > 0) & (n < sql_idx + 4), F.lit("")).otherwise(context_text)
 
 
-def header_fields(header_part: Column) -> tuple[Column, Column]:
-    """-> (keys, values) of the key=value comma parts 3.. (parser.go:80-86),
-    both in REVERSE order: first '=' splits, '=' at position 0 skipped,
-    key space-trimmed, value trimmed of spaces and single quotes.
-    ``values`` leads with one extra '' that ``header_value`` reads for a
-    missing key."""
-    parts = F.split(header_part, ",")
+def _header_valid(parts: Column) -> Column:
+    """The key=value comma parts 3.. (parser.go:80-86) in REVERSE order,
+    without the ones whose first '=' is missing or at position 0 (Go:
+    eq := strings.Index(part, "="); eq > 0, i.e. 1-based instr > 1)."""
     kv = F.slice(parts, 4, F.greatest(F.size(parts) - 3, F.lit(0)))
-    # Go: eq := strings.Index(part, "="); eq > 0  => at least one char
-    # before the '=' (1-based instr > 1)
-    valid = F.reverse(F.filter(kv, lambda p: F.instr(p, "=") > 1))
+    return F.reverse(F.filter(kv, lambda p: F.instr(p, "=") > 1))
+
+
+def _header_kv(valid: Column) -> tuple[Column, Column]:
+    """-> (keys, values) of ``_header_valid`` parts: split at the first
+    '=', key space-trimmed, value trimmed of spaces and single quotes."""
     keys = F.transform(valid, lambda p: F.trim(p.substr(F.lit(1), F.instr(p, "=") - 1)))
     values = F.transform(
         valid,
@@ -172,6 +205,27 @@ def header_fields(header_part: Column) -> tuple[Column, Column]:
         ),
     )
     return keys, F.concat(F.array(F.lit("")), values)
+
+
+def split_record(rec: Column) -> tuple[Column, Column, Column]:
+    """-> (header_part, sql_text, context_text), per ParseLogRecord
+    (parser.go:50-66), as inline expressions of ``rec``."""
+    n = F.length(rec)
+    sql_idx, header_part, quote, rest = _locate(rec)
+    raw_sql, after_sql = _sql_pick(quote, rest, _sql_scan(rest))
+    ctx_idx, ctx_tail = _context_tail(_context_source(rec, sql_idx, after_sql))
+    return (
+        header_part,
+        _sql_text(n, sql_idx, raw_sql),
+        _context_text(n, sql_idx, ctx_idx, ctx_tail),
+    )
+
+
+def header_fields(header_part: Column) -> tuple[Column, Column]:
+    """-> (keys, values) of the header's key=value parts, both in REVERSE
+    order (``_header_valid``, ``_header_kv``).  ``values`` leads with one
+    extra '' that ``header_value`` reads for a missing key."""
+    return _header_kv(_header_valid(F.split(header_part, ",")))
 
 
 def header_value(fields: tuple[Column, Column], go_key: str) -> Column:
@@ -185,14 +239,22 @@ def header_value(fields: tuple[Column, Column], go_key: str) -> Column:
     return F.coalesce(F.element_at(values, idx), F.lit(""))
 
 
+# the Go keys of the 18 header-valued LogEntry fields, in _entry_cols order
+_HEADER_KEYS = (
+    "level", "process", "p:processName", "OSThread", "t:clientID",
+    "t:applicationName", "t:computerName", "t:connectID", "SessionID", "Usr",
+    "DBMS", "DataBase", "Trans", "dbpid", "Rows", "RowsAffected", "Event", "File",
+)
+
+
 def _entry_cols(
-    hdr: tuple[Column, Column], parts: Column, fn: Column, sql_text: Column, context_text: Column
+    hv: dict[str, Column], parts: Column, fn: Column, sql_text: Column, context_text: Column
 ) -> list[Column]:
-    """The 24 LogEntry output expressions (models.go:8-34), shared by the
-    fused and split projection shapes.  ``hdr`` = ``header_fields``;
-    ``parts`` = the header's comma parts, whose positional field ``pos(i)``
-    is trimmed or '' (Go guards each with a len(parts) check,
-    parser.go:71-77 -> try_element_at, missing -> '')."""
+    """The 24 LogEntry output expressions (models.go:8-34).  ``hv`` maps
+    each of ``_HEADER_KEYS`` to its header value; ``parts`` = the header's
+    comma parts, whose positional field ``pos(i)`` is trimmed or '' (Go
+    guards each with a len(parts) check, parser.go:71-77 ->
+    try_element_at, missing -> '')."""
 
     def pos(i: int) -> Column:
         return F.coalesce(F.trim(F.try_element_at(parts, F.lit(i))), F.lit(""))
@@ -202,29 +264,35 @@ def _entry_cols(
         pos(1).alias("LogTimestamp"),
         pos(2).alias("Component"),
         parse_uint(pos(3), _U8_MAX).cast("smallint").alias("Severity"),
-        header_value(hdr, "level").alias("Level"),
-        header_value(hdr, "process").alias("Process"),
-        header_value(hdr, "p:processName").alias("ProcessName"),
-        parse_uint(header_value(hdr, "OSThread"), _U32_MAX).alias("OSThread"),
-        parse_uint(header_value(hdr, "t:clientID"), _U32_MAX).alias("ClientID"),
-        header_value(hdr, "t:applicationName").alias("ApplicationName"),
-        header_value(hdr, "t:computerName").alias("ComputerName"),
-        parse_uint(header_value(hdr, "t:connectID"), _U32_MAX).alias("ConnectID"),
+        hv["level"].alias("Level"),
+        hv["process"].alias("Process"),
+        hv["p:processName"].alias("ProcessName"),
+        parse_uint(hv["OSThread"], _U32_MAX).alias("OSThread"),
+        parse_uint(hv["t:clientID"], _U32_MAX).alias("ClientID"),
+        hv["t:applicationName"].alias("ApplicationName"),
+        hv["t:computerName"].alias("ComputerName"),
+        parse_uint(hv["t:connectID"], _U32_MAX).alias("ConnectID"),
         # ParseUint 64-bit; overflow saturates to long max (parse_uint)
-        parse_uint(header_value(hdr, "SessionID"), (1 << 63) - 1).alias("SessionID"),
-        header_value(hdr, "Usr").alias("User"),
-        header_value(hdr, "DBMS").alias("DBMS"),
-        header_value(hdr, "DataBase").alias("Database"),
-        parse_uint(header_value(hdr, "Trans"), _U32_MAX).alias("Trans"),
-        parse_uint(header_value(hdr, "dbpid"), _U32_MAX).alias("DBPID"),
+        parse_uint(hv["SessionID"], (1 << 63) - 1).alias("SessionID"),
+        hv["Usr"].alias("User"),
+        hv["DBMS"].alias("DBMS"),
+        hv["DataBase"].alias("Database"),
+        parse_uint(hv["Trans"], _U32_MAX).alias("Trans"),
+        parse_uint(hv["dbpid"], _U32_MAX).alias("DBPID"),
         sql_text.alias("SQL"),
-        parse_int32(header_value(hdr, "Rows")).alias("Rows"),
-        parse_int32(header_value(hdr, "RowsAffected")).alias("RowsAffected"),
+        parse_int32(hv["Rows"]).alias("Rows"),
+        parse_int32(hv["RowsAffected"]).alias("RowsAffected"),
         context_text.alias("Context"),
-        header_value(hdr, "Event").alias("EventType"),
-        header_value(hdr, "File").alias("File"),
+        hv["Event"].alias("EventType"),
+        hv["File"].alias("File"),
         F.current_timestamp().alias("InsertedAt"),
     ]
+
+
+def _lp(name: str) -> Column:
+    """An intermediate of the stacked parse.  The __lp_ prefix keeps a
+    passthrough column from colliding with it."""
+    return F.col("__lp_" + name)
 
 
 def parse_records(
@@ -238,64 +306,82 @@ def parse_records(
     Column types follow SURVEY.md §1.3 (unsigned Go ints -> long;
     InsertedAt = current_timestamp(), parser.go:42).
 
-    ``split_stages`` picks the projection shape; both give identical
-    rows.  Split puts the shared intermediates (header keys and values,
-    positional parts, SQL tail, Context tail) behind one round-robin
-    exchange, so the projection compiles as two half-size codegen units
-    and avoids the parse-plane C2 compile storm (BASELINE.md).  Fused is
-    one projection with no exchange.  ``None`` picks split for a batch
-    ``df`` and fused for a streaming one: a long-lived pump pays the
-    exchange on every micro-batch, but the storm only when a class is
-    compiled (SCALING.md §10.3-10.4).  That is once per process only
-    if no per-batch value reaches the generated code: InsertedAt's
-    timestamp is folded in as a literal, so the pump drops it before
-    the sink (``build_techlog_stream``; tests/test_codegen_reuse.py).
+    The parse is a stack of projections, each computing one layer of
+    ``__lp_`` intermediates once from the previous layer's columns
+    (SCALING.md §7): (1) record length, ``Sql=`` index, header part,
+    quote char, SQL tail; (2) the SQL scan of each quote kind, run only
+    for that kind, and the header's comma parts; (3) SQL text, Context
+    source, valid header parts; (4) Context tail, header keys and values;
+    (5) Context text and the 18 header strings; (6) the 24 typed outputs.
+    CollapseProject keeps a layer when the next one references one of its
+    non-cheap columns more than once, which every layer here does.  Only
+    layers 3 and 4 hold higher-order functions, which run outside
+    whole-stage codegen; the rest, the 24-column projection included,
+    are generated code.  Inlined, each output would carry its own copy of
+    the record split, the SQL scan and the header arrays.
+
+    ``split_stages`` adds one round-robin exchange before the last
+    layer; both shapes give identical rows.  ``None`` picks it for a
+    batch ``df`` and not for a streaming one, which would pay the
+    exchange on every micro-batch (SCALING.md §10.7).  InsertedAt's
+    timestamp is folded into the generated code as a literal, so the
+    pump drops it before the sink to compile its classes once per process
+    (``build_techlog_stream``; tests/test_codegen_reuse.py).
     """
-    rec = F.col(record_col)
-    header_part, sql_text, context_text = split_record(rec)
-    parts = F.split(header_part, ",")
-    keys, values = header_fields(header_part)
     keep = [c for c in df.columns if c not in (record_col, filename_col)]
     if split_stages is None:
         split_stages = not df.isStreaming
-    if not split_stages:
-        return df.select(
-            *keep,
-            *_entry_cols((keys, values), parts, F.col(filename_col), sql_text, context_text),
+
+    def layer(frame: DataFrame, carry: str, **new: Column) -> DataFrame:
+        return frame.select(
+            *keep, *(_lp(c) for c in carry.split()), *(v.alias("__lp_" + k) for k, v in new.items())
         )
 
-    try:
-        par = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:  # Connect sessions expose no sparkContext
-        # fall back to the session's shuffle width, not a literal: a
-        # hardcoded width would underpartition the parse stage on a
-        # large cluster driven through Connect
-        par = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    # __lp_-prefixed intermediates so a passthrough column in `keep`
-    # cannot collide and turn into an ambiguous-reference
-    # AnalysisException that only the split shape would hit
-    _fn, _k, _v, _p, _sql, _ctx = (
-        "__lp_parse_fn",
-        "__lp_parse_k",
-        "__lp_parse_v",
-        "__lp_parse_p",
-        "__lp_parse_sql",
-        "__lp_parse_ctx",
+    rec = F.col(record_col)
+    sql_idx, header_part, quote, rest = _locate(rec)
+    df = layer(
+        df, "", fn=F.col(filename_col), rec=rec, n=F.length(rec),
+        sql_idx=sql_idx, header=header_part, quote=quote, rest=rest,
     )
-    mid = df.select(
-        *keep,
-        F.col(filename_col).alias(_fn),
-        keys.alias(_k),
-        values.alias(_v),
-        parts.alias(_p),
-        sql_text.alias(_sql),
-        context_text.alias(_ctx),
-    ).repartition(par)
-    return mid.select(
-        *keep,
-        *_entry_cols(
-            (F.col(_k), F.col(_v)), F.col(_p), F.col(_fn), F.col(_sql), F.col(_ctx)
-        ),
+    scan = {}
+    for i, (q, (closed, raw)) in enumerate(_sql_scan(_lp("rest")).items()):
+        # guarded by the quote kind, so a record runs only its own
+        # kind's regexes
+        is_q = _lp("quote") == q
+        scan[f"closed{i}"] = is_q & closed
+        scan[f"raw{i}"] = F.when(is_q, raw).otherwise(F.lit(""))
+    df = layer(
+        df, "fn rec n sql_idx quote rest", parts=F.split(_lp("header"), ","), **scan
     )
+    raw_sql, after_sql = _sql_pick(
+        _lp("quote"), _lp("rest"),
+        {q: (_lp(f"closed{i}"), _lp(f"raw{i}")) for i, q in enumerate(_QUOTES)},
+    )
+    df = layer(
+        df, "fn n sql_idx parts",
+        sql=_sql_text(_lp("n"), _lp("sql_idx"), raw_sql),
+        ctx_source=_context_source(_lp("rec"), _lp("sql_idx"), after_sql),
+        valid=_header_valid(_lp("parts")),
+    )
+    ctx_idx, ctx_tail = _context_tail(_lp("ctx_source"))
+    keys, values = _header_kv(_lp("valid"))
+    df = layer(
+        df, "fn n sql_idx parts sql",
+        ctx_idx=ctx_idx, ctx_tail=ctx_tail, keys=keys, values=values,
+    )
+    df = layer(
+        df, "fn parts sql",
+        ctx=_context_text(_lp("n"), _lp("sql_idx"), _lp("ctx_idx"), _lp("ctx_tail")),
+        **{f"h{i}": header_value((_lp("keys"), _lp("values")), k) for i, k in enumerate(_HEADER_KEYS)},
+    )
+    if split_stages:
+        try:
+            par = df.sparkSession.sparkContext.defaultParallelism
+        except Exception:  # Connect sessions expose no sparkContext
+            # fall back to the session's shuffle width, not a literal: a
+            # hardcoded width would underpartition the parse stage on a
+            # large cluster driven through Connect
+            par = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+        df = df.repartition(par)
+    hv = {k: _lp(f"h{i}") for i, k in enumerate(_HEADER_KEYS)}
+    return df.select(*keep, *_entry_cols(hv, _lp("parts"), _lp("fn"), _lp("sql"), _lp("ctx")))

@@ -247,3 +247,95 @@ def test_header_fields_match_go(spark, header_lists):
         got = sorted(got, key=lambda row: int(row["Timestamp"].split(".")[0]))
         for rec, g, w in zip(records, got, want):
             assert {c: g[c] for c in _HEADER_COLS} == w, f"record {rec!r} split={split_stages}"
+
+
+# ---------------------------------------------------------------------------
+# The full parse_records, both shapes, vs the models above: SQL, Context,
+# the positional fields, every header-valued field and the numeric casts
+# of whole records, built from headers with duplicate and malformed parts,
+# a "'"- or '"'-quoted SQL with escapes, scrubbed timestamps, missing or
+# early closing quotes, and Context with or without its closing quote;
+# plus free-form bodies.
+
+# a newline only inside a chunk: at the edge of the SQL, Go's TrimSpace
+# drops it and the engine's trim does not (test_sql_edge_whitespace_...)
+_sql_chunk = st.sampled_from(
+    ["SELECT", " ", "a,b", "=", "\\'", '\\"', "\\\\", "\\x", "a\nb", "'", '"', "2025-05-26 07:18:00"]
+)
+_context = st.builds(
+    lambda body, close, after: f",Context='{body}{close}{after}",
+    st.text(alphabet=st.sampled_from(list("ab1 ,=\n'")), max_size=12),
+    st.sampled_from(["", "'"]),
+    st.sampled_from(["", ",x=1", "'"]),
+)
+_sql_part = st.builds(
+    lambda q, chunks, closed, after: f",Sql={q}{''.join(chunks)}{q if closed else ''}{after}",
+    st.sampled_from(["'", '"']),
+    st.lists(_sql_chunk, max_size=8),
+    st.booleans(),
+    st.one_of(st.just(""), _context, st.just(",Rows=5")),
+)
+_record = st.builds(
+    lambda ts, comp, sev, kv, tail: ",".join([ts, comp, sev, *kv]) + tail,
+    st.sampled_from(["07:18.000001-1", " 07:18.5-20 ", ""]),
+    st.sampled_from(["CALL", " DBMSSQL ", ""]),
+    st.one_of(num_strings, st.sampled_from(["3", "255", "256", " 4 "])),
+    headers,
+    st.one_of(st.just(""), _sql_part, _context),
+)
+
+
+def _want_entry(rec: str) -> dict:
+    header, sql, ctx = go_split_record(rec)
+    parts = header.split(",")
+    pos = [parts[i].strip(" ") if i < len(parts) else "" for i in range(3)]
+    fields = go_header(header)
+    want = {
+        "LogTimestamp": pos[0],
+        "Component": pos[1],
+        "Severity": go_parse_uint(pos[2], 255),
+        "SQL": sql,
+        "Context": ctx,
+    }
+    for col, (key, model) in _HEADER_COLS.items():
+        want[col] = (model or (lambda v: v))(fields.get(key, ""))
+    return want
+
+
+@settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(st.one_of(_record, _record, body), min_size=1, max_size=20))
+def test_parse_records_match_go(spark, bodies):
+    from logpump_spark.techlog.parser import parse_records
+
+    records, want = [], []
+    for b in bodies:
+        try:
+            want.append(_want_entry(b))
+            records.append(b)
+        except NotImplementedError:
+            continue  # non-quote delimiter after Sql=: out of modeled space
+    if not records:
+        return
+    df = spark.createDataFrame(
+        [(r, f"{i}.log") for i, r in enumerate(records)],
+        "record string, filename string",
+    )
+    for split_stages in (False, True):
+        got = parse_records(df, split_stages=split_stages).collect()
+        got = sorted(got, key=lambda row: int(row["Timestamp"].split(".")[0]))
+        for rec, g, w in zip(records, got, want):
+            assert {c: g[c] for c in w} == w, f"record {rec!r} split={split_stages}"
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="known divergence: Go's strings.TrimSpace (SURVEY.md §2.C) trims "
+    "tabs and newlines from the SQL and the positional fields, F.trim only spaces",
+)
+def test_sql_edge_whitespace_trimmed_like_go(spark):
+    from logpump_spark.techlog.parser import parse_records
+
+    rec = "\t07:18.000001-1,CALL,1,Sql='\nSELECT 1\n'"
+    df = spark.createDataFrame([(rec, "0.log")], "record string, filename string")
+    row = parse_records(df).collect()[0]
+    assert (row["LogTimestamp"], row["SQL"]) == ("07:18.000001-1", "SELECT 1")

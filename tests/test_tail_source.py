@@ -105,22 +105,26 @@ def test_emit_tail_flushes_open_record(tmp_path):
     reader = tail_reader(d, emitTail="true")
     start = {"offsets": {}}
     end = reader.latestOffset()
-    assert end["offsets"][p] == os.path.getsize(p)
+    # the flush ends at the last complete line: the half-written line
+    # stays held back instead of being cut into two records
+    assert end["offsets"][p] == len((R1 + "\n").encode("utf-8"))
 
-    # the flush ends at the planned end of the file: bytes appended after
-    # planning stay out, so a replay of the same offsets reads the same
+    # bytes appended after planning stay out, so a replay of the same
+    # offsets reads the same
     with open(p, "a", encoding="utf-8") as f:
         f.write(R2_L1[20:] + "\n" + R2_L2 + "\n" + R3 + "\n")
     for _replay in range(2):
         rows = read_batch(reader, start, end)
-        assert rows == [("25052607.log", R1), ("25052607.log", R2_L1[:20])]
+        assert rows == [("25052607.log", R1)]
 
-    # bytes appended after the flush come back once, as a headless record
-    rows2, _ = drain(reader, end)
+    # the next flush reads R2 whole, then the open record R3, whose
+    # line is complete
+    rows2, end2 = drain(reader, end)
     assert rows2 == [
-        ("25052607.log", R2_L1[20:] + "\n" + R2_L2),
+        ("25052607.log", R2_L1 + "\n" + R2_L2),
         ("25052607.log", R3),
     ]
+    assert end2["offsets"][p] == os.path.getsize(p)
 
 
 def test_new_bytes_are_cut_into_ranges(tmp_path):
