@@ -68,6 +68,13 @@ def get_spark(
         # after a full GC 148 -> 218 MB.  The cache is JVM-wide and sized
         # on first use, so it only takes effect on the first session.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # Python workers fork from logpump_spark.pydaemon, so a task's
+        # importlib.invalidate_caches() stops re-reading pyspark.zip and
+        # the other zips on the worker's path on Python < 3.12: a warm
+        # 4-task Python job over 4,000 cached rows took 0.276 -> 0.058 s.
+        # On 3.12+, or with spark.python.use.daemon=false, it changes
+        # nothing.  Executors must be able to import logpump_spark.
+        .config("spark.python.daemon.module", "logpump_spark.pydaemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -20,6 +20,7 @@ import json
 import os
 from itertools import chain
 
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -102,6 +103,27 @@ def write_rejects(rejects: DataFrame, sink_dir: str, epoch_id: int) -> None:
         .partitionBy("_epoch")
         .parquet(f"{sink_dir}/_rejects")
     )
+
+
+def run_side_by_side(fns: list) -> None:
+    """Run each function on its own ``InheritableThread`` (which copies
+    the calling thread's local properties: job group, streaming query
+    id), wait for all, then re-raise the first error."""
+    errors: list[BaseException] = []
+
+    def run(fn) -> None:
+        try:
+            fn()
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+
+    threads = [InheritableThread(run, args=(fn,)) for fn in fns]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
 
 
 def compact_partitions(
@@ -296,7 +318,9 @@ def build_techlog_stream(
       stream -> ClickHouse data path end-to-end (batch sends,
       clickhouse.go:79-125).  A failed INSERT fails the batch,
       which Spark replays (checkpoint + per-epoch idempotent parquet
-      keeps the local sink consistent).
+      keeps the local sink consistent).  The ClickHouse path is
+      at-least-once: a task retry re-sends its partition's POSTs, and
+      a replay re-sends the batch's.
     - ``metrics``: a ``TechLogMetricsListener`` (streaming/metrics.py) —
       the sink reports each epoch's dead-letter count to it, observed on
       the dead-letter write (no extra job), so the per-batch progress
@@ -304,9 +328,15 @@ def build_techlog_stream(
       reference's structured-logging surface, logger.go).  Register it
       with ``metrics.attach(spark)``.
 
-    A micro-batch runs at most three Spark jobs: the parquet write (which
-    parses and caches the batch), the ClickHouse POST job when
-    ``clickhouse_http`` is set, and the dead-letter write.
+    A micro-batch runs at most three Spark jobs, side by side over the
+    cached batch: the parquet write, the ClickHouse POST job when
+    ``clickhouse_http`` is set, and the dead-letter write.  Concurrent
+    tasks on one cached partition compute it once, so the batch is
+    still parsed once.  The sink waits for all three and re-raises the
+    first error, so a failed batch still fails and replays.  One thing
+    differs from running them in turn: a POST can now land while the
+    parquet write fails, and the replay sends it again (ROADMAP
+    direction 3's dedup token closes that window).
 
     Returns a DataStreamWriter; call ``.start()`` (or use
     ``run_stream``).
@@ -356,31 +386,34 @@ def build_techlog_stream(
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         _maybe_reload()
-        # the sink runs up to three jobs over this micro-batch (parquet
-        # write, ClickHouse POST, dead-letter write); cache it so the file
-        # scan + record parse runs ONCE per batch, not once per job
+        # the sink's jobs (parquet write, ClickHouse POST, dead-letter
+        # write) run side by side over this micro-batch, cached so the
+        # file scan + record parse runs ONCE per batch: concurrent tasks
+        # on one cached partition wait for the task that computes it.
+        # Any failure fails the batch, which Spark replays; a POST that
+        # landed before a parquet failure is then sent again.
         batch_df.persist()
         try:
             rows, rejects = to_techlog_rows(batch_df)
-            route_and_write(
-                rows, sink_dir, routing["tmap"], routing["default"], epoch_id=epoch_id
-            )
+            tmap, default = routing["tmap"], routing["default"]
+            writes = [
+                lambda: route_and_write(rows, sink_dir, tmap, default, epoch_id=epoch_id)
+            ]
             if clickhouse_http is not None:
                 from ..sources.clickhouse import write_techlog_http
 
                 # one POST job for every routed table
-                write_techlog_http(
-                    rows,
-                    clickhouse_http,
-                    table_routing_column(routing["tmap"], routing["default"]),
-                )
+                writes.append(lambda: write_techlog_http(
+                    rows, clickhouse_http, table_routing_column(tmap, default)
+                ))
             if metrics is not None:
                 # the reject count rides on the dead-letter write: no job
                 seen = Observation()
                 rejects = rejects.observe(seen, F.count(F.lit(1)).alias("rejects"))
             # dead-letter branch (improvement over the silent drop,
             # clickhouse.go:92-95): keep rejects auditable next to the sink
-            write_rejects(rejects, sink_dir, epoch_id)
+            writes.append(lambda: write_rejects(rejects, sink_dir, epoch_id))
+            run_side_by_side(writes)
             if metrics is not None:
                 metrics.record_rejects(epoch_id, seen.get["rejects"])
         finally:

@@ -109,11 +109,11 @@ def _locate(rec: Column) -> tuple[Column, Column, Column, Column]:
 _QUOTES = ("'", '"')  # the quote delimiters the SQL scan supports
 
 
-def _sql_scan(rest: Column) -> dict[str, tuple[Column, Column]]:
+def _sql_scan(rest: Column) -> dict[str, Column]:
     """Escape-aware scan of ``rest`` to the closing quote, per supported
-    quote delimiter: ``{q: (closed, raw)}``, ``raw`` the SQL body before
-    the first unescaped ``q``.  Any other delimiter falls back to "no
-    closing quote" (``_sql_pick``)."""
+    quote delimiter: ``{q: raw}``, ``raw`` the SQL body before the first
+    unescaped ``q``, or '' when no closing ``q`` follows.  Any other
+    delimiter falls back to "no closing quote" (``_sql_pick``)."""
     out = {}
     for q in _QUOTES:
         qe = "\\" + q
@@ -122,21 +122,24 @@ def _sql_scan(rest: Column) -> dict[str, tuple[Column, Column]]:
         # backtracking regex engine instead of alternation-per-character
         body = r"[^" + qe + r"\\]*(?:\\.[^" + qe + r"\\]*)*"
         pat = r"(?s)^(" + body + r")" + qe
-        out[q] = (rest.rlike(pat), F.regexp_extract(rest, pat, 1))
+        out[q] = F.regexp_extract(rest, pat, 1)
     return out
 
 
-def _sql_pick(quote: Column, rest: Column, scan: dict[str, tuple[Column, Column]]) -> tuple[Column, Column]:
+def _sql_pick(quote: Column, rest: Column, scan: dict[str, Column]) -> tuple[Column, Column]:
     """-> (raw_sql, after_sql): the scan of the record's own delimiter.
-    The match is ^-anchored, so the remainder after the closing quote is
-    POSITIONAL: rest = raw + quote + after.  Deriving it by substr instead
-    of a second capture halves the regex runs per record.  Unterminated
-    quote: the whole tail is SQL and nothing follows
+    The match is ^-anchored, so the quote closes exactly when the
+    character after the extracted body is the quote (no match extracts
+    '', and ``rest`` then cannot start with the quote, or the empty body
+    would have matched): one regex run decides both.  The remainder after
+    the closing quote is POSITIONAL too: rest = raw + quote + after.
+    Unterminated quote: the whole tail is SQL and nothing follows
     (sql_extractor.go:40-44)."""
 
     def pick(f, default: Column) -> Column:
         out = F
-        for q, (closed, raw) in scan.items():
+        for q, raw in scan.items():
+            closed = rest.substr(F.length(raw) + F.lit(1), F.lit(1)) == F.lit(q)
             out = out.when(quote == q, f(closed, raw))
         return out.otherwise(default)
 
@@ -343,19 +346,17 @@ def parse_records(
         df, "", fn=F.col(filename_col), rec=rec, n=F.length(rec),
         sql_idx=sql_idx, header=header_part, quote=quote, rest=rest,
     )
-    scan = {}
-    for i, (q, (closed, raw)) in enumerate(_sql_scan(_lp("rest")).items()):
+    scan = {
         # guarded by the quote kind, so a record runs only its own
-        # kind's regexes
-        is_q = _lp("quote") == q
-        scan[f"closed{i}"] = is_q & closed
-        scan[f"raw{i}"] = F.when(is_q, raw).otherwise(F.lit(""))
+        # kind's regex
+        f"raw{i}": F.when(_lp("quote") == q, raw).otherwise(F.lit(""))
+        for i, (q, raw) in enumerate(_sql_scan(_lp("rest")).items())
+    }
     df = layer(
         df, "fn rec n sql_idx quote rest", parts=F.split(_lp("header"), ","), **scan
     )
     raw_sql, after_sql = _sql_pick(
-        _lp("quote"), _lp("rest"),
-        {q: (_lp(f"closed{i}"), _lp(f"raw{i}")) for i, q in enumerate(_QUOTES)},
+        _lp("quote"), _lp("rest"), {q: _lp(f"raw{i}") for i, q in enumerate(_QUOTES)}
     )
     df = layer(
         df, "fn n sql_idx parts",

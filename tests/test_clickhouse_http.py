@@ -22,12 +22,18 @@ from logpump_spark.sources.clickhouse import (
 )
 
 _RECEIVED: list[dict] = []
+_FAIL_NEXT = [0]  # the next N POSTs are answered 500 and not recorded
 
 
 class _Handler(BaseHTTPRequestHandler):
     def do_POST(self):  # noqa: N802 — stdlib handler contract
         length = int(self.headers.get("Content-Length", 0))
         body = self.rfile.read(length)
+        if _FAIL_NEXT[0] > 0:
+            _FAIL_NEXT[0] -= 1
+            self.send_response(500)
+            self.end_headers()
+            return
         _RECEIVED.append(
             {
                 "query": urllib.parse.parse_qs(
@@ -49,6 +55,7 @@ class _Handler(BaseHTTPRequestHandler):
 @pytest.fixture()
 def mock_server():
     _RECEIVED.clear()
+    _FAIL_NEXT[0] = 0
     srv = HTTPServer(("127.0.0.1", 0), _Handler)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
@@ -427,3 +434,54 @@ def test_stream_batch_with_http_sink_runs_three_jobs(spark, mock_server, tmp_pat
     assert len(batches) == 1 and batches[0]["rejects"] == 0
     assert {t for t, _ in _posts_by_table()} == {"errors", "sql_log", "tech_log"}
     assert n_jobs == 3
+
+
+def test_failed_post_fails_the_batch_and_the_replay_lands_it(spark, mock_server, tmp_path):
+    """The sink's three writes run side by side.  A 500 on the first POST
+    fails the micro-batch (whatever the other two writes did), and a
+    second drain on the same checkpoint replays it: every row lands
+    exactly once in parquet, every reject once in ``_rejects``, and every
+    row at least once at the mock (the ClickHouse path is at-least-once)."""
+    import os
+
+    from logpump_spark.streaming import build_techlog_stream
+    from logpump_spark.streaming.job import run_stream
+
+    d = {k: str(tmp_path / k) for k in ("in", "out", "ckpt")}
+    os.makedirs(d["in"])
+    with open(f"{d['in']}/25052607.log", "w", encoding="utf-8") as f:
+        f.write(
+            "07:15.123456-2500,DBMSSQL,0,Usr=ivanov,Sql='SELECT 1'\n"
+            "08:02.000001-10,EXCP,3,Usr=petrov,Event=Boom\n"
+            "09:30.999999-42,CALL,1,Usr=sidorov\n"
+        )
+    with open(f"{d['in']}/bad.log", "w", encoding="utf-8") as f:
+        f.write("10:00.000001-1,CALL,1,Usr=nodate\n")  # no date: dead letter
+    cfg = ClickHouseConfig(
+        address=mock_server, username="u", password="p",
+        database="logs", protocol="http",
+    )
+
+    def drain() -> None:
+        run_stream(build_techlog_stream(
+            spark, d["in"], d["out"], d["ckpt"], table_map=_ROUTES,
+            available_now=True, clickhouse_http=cfg,
+        ), timeout_seconds=120)
+
+    _FAIL_NEXT[0] = 1
+    with pytest.raises(Exception):
+        drain()
+    assert _FAIL_NEXT[0] == 0
+    drain()
+
+    landed = spark.read.parquet(d["out"]).select("_table", "EventType", "User").collect()
+    assert sorted(map(tuple, landed)) == [
+        ("errors", "EXCP", "petrov"), ("sql_log", "DBMSSQL", "ivanov"),
+        ("tech_log", "CALL", "sidorov"),
+    ]
+    rejects = spark.read.parquet(f"{d['out']}/_rejects")
+    assert [r.reject_reason for r in rejects.collect()] == ["bad_filename"]
+    at_mock = {
+        (t, ln.split("\t")[2], ln.split("\t")[4]) for t, lines in _posts_by_table() for ln in lines
+    }
+    assert at_mock >= {tuple(r) for r in landed}

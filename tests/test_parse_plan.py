@@ -35,6 +35,9 @@ def test_shared_pieces_appear_once_in_the_plan(records, split_stages):
     assert plan.count("filter(") == 1
     assert plan.count("transform(") == 2
     assert plan.count("regexp_extract(") <= 2
+    # only the strconv syntax checks: the SQL scan reads its closing
+    # quote off its one regexp_extract, with no RLIKE
+    assert plan.count("RLIKE") == 20
 
 
 @pytest.mark.parametrize("split_stages", [False, True], ids=["fused", "split"])
