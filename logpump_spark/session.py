@@ -71,7 +71,8 @@ def get_spark(
         # Python workers fork from logpump_spark.pydaemon, so a task's
         # importlib.invalidate_caches() stops re-reading pyspark.zip and
         # the other zips on the worker's path on Python < 3.12: a warm
-        # 4-task Python job over 4,000 cached rows took 0.276 -> 0.058 s.
+        # 4-task Python job over 4,000 cached rows took 0.301 -> 0.110 s
+        # (median of 10 on 4 cores; a JVM noop write of the rows, 0.055 s).
         # On 3.12+, or with spark.python.use.daemon=false, it changes
         # nothing.  Executors must be able to import logpump_spark.
         .config("spark.python.daemon.module", "logpump_spark.pydaemon")

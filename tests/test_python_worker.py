@@ -16,7 +16,12 @@ from pyspark.sql import functions as F
 from logpump_spark import pydaemon
 
 
-@pytest.mark.skipif(sys.version_info >= (3, 12), reason="3.12 invalidates zip caches lazily")
+lazy_invalidate = pytest.mark.skipif(
+    sys.version_info >= (3, 12), reason="3.12 invalidates zip caches lazily"
+)
+
+
+@lazy_invalidate
 def test_udf_worker_uses_stat_gated_invalidate(spark):
     @F.udf("string")
     def invalidate_source(_):
@@ -34,6 +39,7 @@ def _write_zip(path, modules: dict[str, str]) -> None:
             z.writestr(f"{name}.py", src)
 
 
+@lazy_invalidate
 def test_invalidate_rereads_only_a_changed_archive(tmp_path, monkeypatch):
     path = str(tmp_path / "mods.zip")
     _write_zip(path, {"m1": "X = 1\n"})
