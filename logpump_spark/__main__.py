@@ -8,8 +8,9 @@ interrupted (SIGINT/SIGTERM stop the query gracefully — R3; Spark flushes
 the in-flight micro-batch and commits the checkpoint).  ``--drain``
 processes everything currently on disk and exits (availableNow), the
 batch-mode counterpart.  Per-micro-batch metrics (rows/sec, batch
-duration, dead-letter rejects) stream to the ``logpump_spark.metrics``
-logger as JSON lines — the logger.go structured-logging analog.  The
+duration, records and dead-letter rejects, which the stream observes as
+``techlog``) stream to the ``logpump_spark.metrics`` logger as JSON
+lines — the logger.go structured-logging analog.  The
 routing (TableMap, DefaultTable) reloads from ``--config`` when the file
 changes (config.py).
 
@@ -63,7 +64,6 @@ def main() -> int:
         trigger_seconds=cfg.batch_interval,
         available_now=args.drain,
         config_path=args.config,
-        metrics=metrics,
         # the live ClickHouse bulk-INSERT path alongside the parquet
         # sink — the reference's data path
         clickhouse_http=cfg.clickhouse if use_clickhouse else None,

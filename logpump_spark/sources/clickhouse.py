@@ -29,6 +29,10 @@ from pyspark.sql import types as T
 from ..config import ClickHouseConfig
 from ..techlog.transform import TECHLOG_COLUMNS as TECHLOG_INSERT_COLUMNS
 
+INSERT_TIMEOUT_S = 60  # the reference's insert timeout (clickhouse.go:77)
+# a partition's buffered bytes (all tables) that trigger an early POST
+MAX_POST_BYTES = 32 * 1024 * 1024
+
 
 def insert_statement(table: str) -> str:
     """The reference's hard-coded 16-column INSERT list, HTTP form."""
@@ -71,8 +75,6 @@ def write_techlog_http(
     rows: DataFrame,
     cfg: ClickHouseConfig,
     table: str | Column,
-    insert_timeout_s: int = 60,
-    max_post_bytes: int = 32 * 1024 * 1024,
 ) -> None:
     """Append TechLogRow rows via the ClickHouse HTTP interface, in ONE
     Spark job.  ``table`` is a table name, or a Column naming each row's
@@ -81,9 +83,9 @@ def write_techlog_http(
     INSERT loop (clickhouse.go:63-128) without a job per group.
 
     Each partition serializes its rows once and keeps one buffer per
-    table; a buffer becomes one POST (reference semantics: 60 s insert
-    timeout, clickhouse.go:77; batch-per-send, :79-125).  When the sum
-    of a partition's buffers reaches ``max_post_bytes`` its largest
+    table; a buffer becomes one POST (reference semantics:
+    ``INSERT_TIMEOUT_S``; batch-per-send, clickhouse.go:79-125).  When
+    the sum of a partition's buffers reaches ``MAX_POST_BYTES`` its largest
     buffer is sent early, so executor-Python memory stays bounded by one
     cap regardless of partition size or table count — a 500 MB partition
     becomes ~16 sequential 32 MB INSERTs, each an independent ClickHouse
@@ -113,7 +115,7 @@ def write_techlog_http(
                 method="POST",
             )
             # raises urllib.error.HTTPError on non-2xx -> task retry
-            with urllib.request.urlopen(req, timeout=insert_timeout_s):
+            with urllib.request.urlopen(req, timeout=INSERT_TIMEOUT_S):
                 pass
 
         bufs: dict[str, list[bytes]] = {}
@@ -124,7 +126,7 @@ def write_techlog_http(
             bufs.setdefault(t, []).append(b)
             sizes[t] = sizes.get(t, 0) + len(b)
             total += len(b)
-            if total >= max_post_bytes:
+            if total >= MAX_POST_BYTES:
                 big = max(sizes, key=sizes.get)
                 send(big, bufs.pop(big))
                 total -= sizes.pop(big)

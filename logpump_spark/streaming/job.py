@@ -21,12 +21,12 @@ import os
 from itertools import chain
 
 from pyspark import InheritableThread
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..techlog.parser import parse_records
 from ..techlog.reader import load_whole_files, records_from_text
-from ..techlog.transform import to_techlog_rows
+from ..techlog.transform import split_rows, transform_entries
 
 
 def table_routing_column(
@@ -288,7 +288,6 @@ def build_techlog_stream(
     available_now: bool = False,
     max_files_per_trigger: int | None = None,
     config_path: str | None = None,
-    metrics=None,
     clickhouse_http=None,
 ):
     """Assemble (not start) the streaming query.
@@ -321,12 +320,6 @@ def build_techlog_stream(
       keeps the local sink consistent).  The ClickHouse path is
       at-least-once: a task retry re-sends its partition's POSTs, and
       a replay re-sends the batch's.
-    - ``metrics``: a ``TechLogMetricsListener`` (streaming/metrics.py) —
-      the sink reports each epoch's dead-letter count to it, observed on
-      the dead-letter write (no extra job), so the per-batch progress
-      record carries rejects alongside rows/sec and batch duration (the
-      reference's structured-logging surface, logger.go).  Register it
-      with ``metrics.attach(spark)``.
 
     A micro-batch runs at most three Spark jobs, side by side over the
     cached batch: the parquet write, the ClickHouse POST job when
@@ -337,6 +330,13 @@ def build_techlog_stream(
     differs from running them in turn: a POST can now land while the
     parquet write fails, and the replay sends it again (ROADMAP
     direction 3's dedup token closes that window).
+
+    The stream frame is observed as ``techlog``: each micro-batch's
+    progress carries ``observedMetrics["techlog"]`` with ``records`` (log
+    records parsed) and ``rejects`` (dead-letter rows), so any listener
+    (``streaming/metrics.py``) or ``query.lastProgress`` reads them (the
+    reference's per-batch structured log, logger.go).  The count rides
+    on the batch's own scan: no extra job.
 
     Returns a DataStreamWriter; call ``.start()`` (or use
     ``run_stream``).
@@ -355,7 +355,13 @@ def build_techlog_stream(
     # InsertedAt (current_timestamp) would be folded into the batch's
     # generated code as a literal, so every micro-batch would compile its
     # parse classes anew; no sink reads it (TECHLOG_COLUMNS, rejects)
-    entries = parse_records(records_from_text(files)).drop("InsertedAt")
+    entries = transform_entries(
+        parse_records(records_from_text(files)).drop("InsertedAt")
+    ).observe(
+        "techlog",
+        F.count(F.lit(1)).alias("records"),
+        F.count_if(~F.col("_valid")).alias("rejects"),
+    )
     routing = {"mtime": None, "tmap": table_map or {}, "default": default_table}
 
     def _maybe_reload() -> None:
@@ -388,13 +394,14 @@ def build_techlog_stream(
         _maybe_reload()
         # the sink's jobs (parquet write, ClickHouse POST, dead-letter
         # write) run side by side over this micro-batch, cached so the
-        # file scan + record parse runs ONCE per batch: concurrent tasks
-        # on one cached partition wait for the task that computes it.
-        # Any failure fails the batch, which Spark replays; a POST that
-        # landed before a parquet failure is then sent again.
+        # file scan, parse, transform and the observed counts run ONCE
+        # per batch: concurrent tasks on one cached partition wait for
+        # the task that computes it.  Any failure fails the batch, which
+        # Spark replays; a POST that landed before a parquet failure is
+        # then sent again.
         batch_df.persist()
         try:
-            rows, rejects = to_techlog_rows(batch_df)
+            rows, rejects = split_rows(batch_df)
             tmap, default = routing["tmap"], routing["default"]
             writes = [
                 lambda: route_and_write(rows, sink_dir, tmap, default, epoch_id=epoch_id)
@@ -406,16 +413,10 @@ def build_techlog_stream(
                 writes.append(lambda: write_techlog_http(
                     rows, clickhouse_http, table_routing_column(tmap, default)
                 ))
-            if metrics is not None:
-                # the reject count rides on the dead-letter write: no job
-                seen = Observation()
-                rejects = rejects.observe(seen, F.count(F.lit(1)).alias("rejects"))
             # dead-letter branch (improvement over the silent drop,
             # clickhouse.go:92-95): keep rejects auditable next to the sink
             writes.append(lambda: write_rejects(rejects, sink_dir, epoch_id))
             run_side_by_side(writes)
-            if metrics is not None:
-                metrics.record_rejects(epoch_id, seen.get["rejects"])
         finally:
             batch_df.unpersist()
 

@@ -4,17 +4,16 @@ Reference counterpart: the service's structured logging + Sentry tee
 (internal/logger/logger.go:18-139) — every batch INSERT and every
 skipped row is visible to an operator.  The Spark twin is a
 ``StreamingQueryListener`` emitting ONE structured record per
-micro-batch — rows/sec, batch duration, dead-letter reject count — to
-the standard ``logging`` machinery (route to file/Sentry/anything via
-handlers), and retaining the records in memory for tests and scraping.
+micro-batch — rows/sec, batch duration, records parsed, dead-letter
+reject count — to the standard ``logging`` machinery (route to
+file/Sentry/anything via handlers), and retaining the records in memory
+for tests and scraping.
 
-Reject counts can't be observed from the engine's progress event (they
-are a sink-side decision).  The sink counts them with an ``Observation``
-on its dead-letter write, so the count costs no Spark job of its own,
-and reports it to the listener via ``record_rejects`` keyed by epoch id;
-the listener merges it into the progress record for that batch when the
-event fires (progress events fire after ``foreachBatch`` returns, so the
-count is always there).
+The record and reject counts come from the engine's own progress event:
+``build_techlog_stream`` observes its stream frame as ``techlog``, so
+every progress carries ``observedMetrics["techlog"]`` (``records``,
+``rejects``).  The listener only reads it; a batch without it (no data)
+counts 0.
 """
 
 from __future__ import annotations
@@ -42,17 +41,18 @@ class AlertConfig:
     structured record (route it to PagerDuty/Sentry/log from there)."""
 
     max_rejects_per_batch: int | None = None
-    max_reject_ratio: float | None = None  # rejects / input_rows, batch > 0
+    max_reject_ratio: float | None = None  # rejects / records, records > 0
     on_alert: Callable[[dict], None] | None = None  # default: log.error
 
 
 class TechLogMetricsListener(StreamingQueryListener):
     """Per-micro-batch metrics: append one record per progress event to
-    ``self.batches`` and emit it as a JSON log line."""
+    ``self.batches`` and emit it as a JSON log line.  ``input_rows`` is
+    Spark's ``numInputRows``, which counts FILES for the wholetext
+    source; ``records`` and ``rejects`` count log records."""
 
     def __init__(self, alerts: AlertConfig | None = None) -> None:
         self._lock = threading.Lock()
-        self._pending_rejects: dict[int, int] = {}
         self.batches: list[dict] = []
         self.alert_config = alerts
         self.alerts: list[dict] = []
@@ -78,8 +78,8 @@ class TechLogMetricsListener(StreamingQueryListener):
             reasons.append("rejects_per_batch")
         if (
             cfg.max_reject_ratio is not None
-            and rec["input_rows"] > 0
-            and rec["rejects"] / rec["input_rows"] > cfg.max_reject_ratio
+            and rec["records"] > 0
+            and rec["rejects"] / rec["records"] > cfg.max_reject_ratio
         ):
             reasons.append("reject_ratio")
         if reasons:
@@ -95,30 +95,23 @@ class TechLogMetricsListener(StreamingQueryListener):
     def detach(self, spark: SparkSession) -> None:
         spark.streams.removeListener(self)
 
-    def record_rejects(self, batch_id: int, n: int) -> None:
-        """Called by the sink (foreachBatch) with the dead-letter row
-        count of the epoch it just wrote."""
-        with self._lock:
-            self._pending_rejects[int(batch_id)] = int(n)
-
     # -- listener callbacks (listener-bus thread) -------------------
     def onQueryStarted(self, event) -> None:
         log.info(json.dumps({"event": "query_started", "id": str(event.id)}))
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
-        batch_id = int(p.batchId)
-        with self._lock:
-            rejects = self._pending_rejects.pop(batch_id, 0)
+        observed = p.observedMetrics.get("techlog") or {"records": 0, "rejects": 0}
         duration = dict(p.durationMs or {})
         rps = p.processedRowsPerSecond
         rec = {
             "event": "batch",
-            "batch_id": batch_id,
+            "batch_id": int(p.batchId),
             "input_rows": int(p.numInputRows),
             "rows_per_sec": float(rps) if rps == rps else 0.0,  # NaN -> 0
             "batch_duration_ms": int(duration.get("triggerExecution", 0)),
-            "rejects": rejects,
+            "records": int(observed["records"]),
+            "rejects": int(observed["rejects"]),
         }
         with self._lock:
             self.batches.append(rec)

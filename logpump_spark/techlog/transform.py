@@ -99,10 +99,9 @@ def transform_entries(entries: DataFrame) -> DataFrame:
     )
 
 
-def to_techlog_rows(entries: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """-> (valid TechLogRow DataFrame in sink column order, dead-letter
-    DataFrame with reject reasons)."""
-    t = transform_entries(entries)
+def split_rows(t: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """A ``transform_entries`` frame -> (valid TechLogRow DataFrame in sink
+    column order, dead-letter DataFrame with reject reasons)."""
     rows = t.filter(F.col("_valid")).select(
         F.col("EventDate"),
         F.col("EventTime"),
@@ -125,3 +124,8 @@ def to_techlog_rows(entries: DataFrame) -> tuple[DataFrame, DataFrame]:
         "Timestamp", "LogTimestamp", F.col("_reject_reason").alias("reject_reason")
     )
     return rows, rejects
+
+
+def to_techlog_rows(entries: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """LogEntry DataFrame -> ``split_rows(transform_entries(entries))``."""
+    return split_rows(transform_entries(entries))

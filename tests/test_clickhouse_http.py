@@ -346,7 +346,8 @@ def _posts_by_table() -> list[tuple[str, list[str]]]:
     return out
 
 
-def test_mixed_table_partition_posts_per_table_under_cap(spark, mock_server):
+def test_mixed_table_partition_posts_per_table_under_cap(spark, mock_server, monkeypatch):
+    import logpump_spark.sources.clickhouse as ch
     from logpump_spark.streaming.job import table_routing_column
 
     cfg = ClickHouseConfig(
@@ -361,10 +362,8 @@ def test_mixed_table_partition_posts_per_table_under_cap(spark, mock_server):
     df = spark.createDataFrame(rows, _techlog_rows(spark).schema).coalesce(1)
     assert df.rdd.getNumPartitions() == 1
     line_bytes = max(len(r.line) + 1 for r in techlog_tsv_lines(df).collect())
-    write_techlog_http(
-        df, cfg, table_routing_column(_ROUTES, "tech_log"),
-        max_post_bytes=4 * line_bytes,
-    )
+    monkeypatch.setattr(ch, "MAX_POST_BYTES", 4 * line_bytes)
+    write_techlog_http(df, cfg, table_routing_column(_ROUTES, "tech_log"))
 
     posts = _posts_by_table()
     got: list[str] = []
@@ -419,7 +418,7 @@ def test_stream_batch_with_http_sink_runs_three_jobs(spark, mock_server, tmp_pat
     try:
         writer = build_techlog_stream(
             spark, d["in"], d["out"], d["ckpt"], table_map=_ROUTES,
-            available_now=True, clickhouse_http=cfg, metrics=listener,
+            available_now=True, clickhouse_http=cfg,
         )
         j0 = last_job_id()
         run_stream(writer, timeout_seconds=120)

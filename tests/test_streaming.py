@@ -461,7 +461,6 @@ def test_metrics_listener_two_batches(spark, tmp_path):
             table_map=TABLE_MAP,
             available_now=True,
             max_files_per_trigger=1,  # one file per micro-batch -> 2 batches
-            metrics=listener,
         )
         run_stream(writer, timeout_seconds=120)
         # progress events are delivered on the listener-bus thread
@@ -480,6 +479,77 @@ def test_metrics_listener_two_batches(spark, tmp_path):
     assert all(b["rows_per_sec"] >= 0.0 for b in batches)
     # exactly one dead-letter row total, in the bad.log batch
     assert sorted(b["rejects"] for b in batches) == [0, 1]
+    assert sorted(b["records"] for b in batches) == [1, 2]
+
+
+def test_observed_counts_reach_progress_without_a_listener(spark, tmp_path):
+    # the stream frame itself is observed, so the counts ride Spark's
+    # progress channel whether or not anyone listens
+    d = _dirs(tmp_path)
+    with open(f"{d['in']}/25052607.log", "w", encoding="utf-8") as f:
+        f.write(RECORD_A + RECORD_B)
+    with open(f"{d['in']}/bad.log", "w", encoding="utf-8") as f:
+        f.write(RECORD_C)  # filename too short for a date -> dead letter
+
+    q = build_techlog_stream(
+        spark, d["in"], d["out"], d["ckpt"], table_map=TABLE_MAP, available_now=True
+    ).start()
+    q.awaitTermination(120)
+
+    observed = q.lastProgress["observedMetrics"]["techlog"]
+    dead = spark.read.parquet(f"{d['out']}/_rejects").count()
+    assert observed["rejects"] == dead == 1
+    assert observed["records"] == 3
+
+
+def test_reject_ratio_counts_records_not_files(spark, tmp_path):
+    # the wholetext source reads one input row per FILE, so the ratio
+    # must divide by the observed record count: 1 of 4 rejected stays
+    # under 0.5, 3 of 4 crosses it
+    import time as _time
+
+    from logpump_spark.streaming.metrics import (
+        AlertConfig,
+        TechLogMetricsListener,
+    )
+
+    bad_fraction = "10:00.123-1,CALL,1,Usr=short\n"  # 3 digits: bad_event_time
+    d = _dirs(tmp_path)
+    with open(f"{d['in']}/25052607.log", "w", encoding="utf-8") as f:
+        f.write(RECORD_A + RECORD_B + RECORD_C + bad_fraction)
+    with open(f"{d['in']}/25052608.log", "w", encoding="utf-8") as f:
+        f.write(RECORD_A + bad_fraction * 3)
+
+    fired: list[dict] = []
+    listener = TechLogMetricsListener(
+        alerts=AlertConfig(max_reject_ratio=0.5, on_alert=fired.append)
+    ).attach(spark)
+    try:
+        writer = build_techlog_stream(
+            spark,
+            d["in"],
+            d["out"],
+            d["ckpt"],
+            table_map=TABLE_MAP,
+            available_now=True,
+            max_files_per_trigger=1,  # one file per micro-batch -> 2 batches
+        )
+        run_stream(writer, timeout_seconds=120)
+        deadline = _time.time() + 30
+        while _time.time() < deadline and len(listener.batches) < 2:
+            _time.sleep(0.2)
+    finally:
+        listener.detach(spark)
+
+    batches = [b for b in listener.batches if b["input_rows"] > 0]
+    assert sorted((b["records"], b["rejects"]) for b in batches) == [(4, 1), (4, 3)]
+    reasons = {
+        r.reject_reason for r in spark.read.parquet(f"{d['out']}/_rejects").collect()
+    }
+    assert reasons == {"bad_event_time"}
+    assert len(fired) == 1, fired
+    assert fired[0]["reasons"] == ["reject_ratio"]
+    assert fired[0]["batch"]["rejects"] == 3
 
 
 def test_llm_quality_gate_streaming_equals_batch(spark, tmp_path):
@@ -545,7 +615,6 @@ def test_alert_hook_fires_once_on_bad_batch(spark, tmp_path):
             table_map=TABLE_MAP,
             available_now=True,
             max_files_per_trigger=1,  # one file per micro-batch -> 2 batches
-            metrics=listener,
         )
         run_stream(writer, timeout_seconds=120)
         deadline = _time.time() + 30
